@@ -1,0 +1,7 @@
+"""Make the benchmark modules and the catena_spark package importable."""
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [os.path.dirname(HERE), os.path.dirname(os.path.dirname(HERE))]
