@@ -281,15 +281,17 @@ def main() -> None:
             "re-run on an idle machine",
             file=sys.stderr,
         )
+    # the latency profile: this session's build conf, restored after the
+    # scaling probes below
+    latency_shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", "16")
+    latency_mpb = os.environ.get("SPARK_GRAFT_MPB", "2m")
     spark = get_spark(
         app_name="catena-bench",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]",
-        shuffle_partitions=os.environ.get("SPARK_GRAFT_SHUFFLE", "16"),
+        shuffle_partitions=latency_shuffle,
         extra_conf={
             "spark.sql.adaptive.enabled": "false",
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SPARK_GRAFT_MPB", "2m"
-            ),
+            "spark.sql.files.maxPartitionBytes": latency_mpb,
             "spark.locality.wait": "0s",
         },
     )
@@ -360,20 +362,24 @@ def main() -> None:
     spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
     spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
     scaling: dict[str, float] = {}
-    for name, fn in SCALING_QUERIES.items():
-        spark.sparkContext.setJobDescription(name)
-        df = fn(spark, SF_DIR)
-        t: list[float] = []
-        for i in range(4):  # 1 warmup + 3 timed
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            if i > 0:
-                t.append(time.perf_counter() - t0)
-        scaling[name] = round(statistics.median(t), 4)
-    spark.sparkContext.setJobDescription(None)
-    # restore the bench latency profile so the vm_quantum stamp below is
-    # measured under the same conf as every BENCH_r1..r17 record
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, fn in SCALING_QUERIES.items():
+            spark.sparkContext.setJobDescription(name)
+            df = fn(spark, SF_DIR)
+            t: list[float] = []
+            for i in range(4):  # 1 warmup + 3 timed
+                t0 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                if i > 0:
+                    t.append(time.perf_counter() - t0)
+            scaling[name] = round(statistics.median(t), 4)
+    finally:
+        spark.sparkContext.setJobDescription(None)
+        # restore the bench latency profile so the vm_quantum stamp below
+        # is measured under the same conf as every BENCH_r1..r17 record
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", latency_mpb)
+        spark.conf.set("spark.sql.shuffle.partitions", latency_shuffle)
 
     # post-run rescan (ADVICE r10): a foreign JVM that launched AFTER
     # the pre-scan but DURING the timed loop is exactly the overlap the
@@ -393,7 +399,10 @@ def main() -> None:
             "registry keys whose latency scales visibly with "
             "$SPARK_GRAFT_CPUS, added per VERDICT r17 item 2 — which "
             "are EXCLUDED from value to keep it comparable with "
-            "BENCH_r1..r17; their sum is value_with_scaling_probes."
+            "BENCH_r1..r17; their sum is value_with_scaling_probes. "
+            "From r19 on tables.load reads each table's cached parquet "
+            "schema instead of re-inferring it per call, so "
+            "queries_cold_plan is not comparable with earlier records."
         ),
         "value": round(sum(prepared.values()), 4),
         "value_with_scaling_probes": round(

@@ -24,9 +24,12 @@ Scale notes (100 TB / 1000-executor target):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger("catena_spark")
 
 #: Runtime-settable conf every query path must see for oracle parity and
 #: sane local performance, applied even when the caller (the driver) built
@@ -68,6 +71,11 @@ def env_int(name: str, default: int) -> int:
             f"env {name}={raw!r} is not an integer (unset or empty uses "
             f"the default {default})"
         ) from None
+
+
+#: set once a failed package ship has been logged: ensure_runtime_conf
+#: retries the ship on every load, the warning is issued once per process
+_ship_failure_logged = False
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -133,8 +141,19 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
             )
     try:
         _ship_package(spark)
-    except Exception:
-        pass  # best-effort; our own sessions already have the package
+    except Exception as e:
+        # best-effort (our own sessions already have the package), but a
+        # foreign session's executors then cannot import catena_spark
+        global _ship_failure_logged
+        if not _ship_failure_logged:
+            _ship_failure_logged = True
+            _LOG.warning(
+                "catena_spark: could not ship the package to executors "
+                "(%s: %s); executor Python workers of a session started "
+                "outside the repo may fail to import catena_spark",
+                type(e).__name__,
+                e,
+            )
     return spark
 
 

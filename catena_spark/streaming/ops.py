@@ -404,24 +404,18 @@ def _normalize_stream_ts(src: DataFrame) -> DataFrame:
     return src
 
 
-#: raw events schema per sf_dir — the keys that build two stream legs
-#: (dedup's self-union, the interval join) would otherwise re-fetch the
-#: parquet footer per leg; on object storage those are remote round-trips
-_RAW_SCHEMA_CACHE: dict[str, object] = {}
-
-
 def _stream_events(spark, sf_dir, path=None, **options):
-    """File-source streaming read of the events table (schema inferred
-    from the batch reader, ts normalized). By default reads the shared
+    """File-source streaming read of the events table (schema from the
+    batch loader's cache, ``tables.parquet_schema``, so a rewritten
+    events file re-infers; ts normalized). By default reads the shared
     fixture dir with pathGlobFilter picking the single events.parquet
     file; pass ``path`` (+ reader options like maxFilesPerTrigger) to
     stream a multi-file events directory instead — both the fast path
     and the replay fallback go through this one reader so a future read
     change cannot reach one and miss the other."""
-    raw_schema = _RAW_SCHEMA_CACHE.get(sf_dir)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _RAW_SCHEMA_CACHE[sf_dir] = raw_schema
+    raw_schema = tables.parquet_schema(
+        spark, tables.parquet_path(sf_dir, "events")
+    )
     reader = spark.readStream.schema(raw_schema)
     if path is None:
         fixture = os.path.join(sf_dir, "events.parquet")

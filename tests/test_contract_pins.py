@@ -26,7 +26,9 @@ premise, new test), instead of drifting in as a "speedup".
 
 from __future__ import annotations
 
+import ast
 import inspect
+import os
 
 from catena_spark.operators import llm
 
@@ -55,9 +57,19 @@ def test_simhash_near_pairs_semantics_pinned():
 def test_banding_growth_guard_premise_intact():
     """The sweep_scale growth guard still compares the banded path
     against the exact baseline — the premise pin #1 protects."""
-    text = open("scripts/sweep_scale.py").read()
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "sweep_scale.py",
+    )
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    (value,) = [
+        node.value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "BANDING_SPEEDUP" for t in node.targets)
+    ]
     assert ("llm_ann_lsh", "llm_embedding_near_dup") in [
-        (a, b) for a, b, _ in eval(
-            text.split("BANDING_SPEEDUP = ")[1].split("]")[0] + "]"
-        )
+        (a, b) for a, b, _ in ast.literal_eval(value)
     ]

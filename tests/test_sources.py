@@ -1610,3 +1610,147 @@ def test_map_value_widening_drift(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="irreconcilable.*key_value.value"):
         encodings.merged_drifted_schema(str(bad))
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts. The status tracker is fed
+    asynchronously, so a marker job in a second group is awaited first:
+    once it is visible, every job started before it is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, marker = (f"catena-test-{uuid.uuid4().hex}" for _ in range(2))
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        sc.setJobGroup(marker, marker)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 60
+    while not sc.statusTracker().getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _row_hash(df) -> str:
+    """Order-insensitive value hash, as in drive_contract.py's value_hash."""
+    import hashlib
+
+    from catena_spark.parity import norm_cell
+
+    h = hashlib.sha256()
+    for line in sorted("\x01".join(map(norm_cell, r)) for r in df.collect()):
+        h.update(line.encode() + b"\n")
+    return h.hexdigest()
+
+
+def test_load_schema_cache_is_result_identical(spark):
+    """tables.load infers a table's schema once: the second load of every
+    table in tables.TABLES starts no Spark job (the inference job is
+    skipped) and returns the same dtypes and rows as the inferring first
+    load."""
+    import os
+
+    for t in tables.TABLES:
+        path = os.path.abspath(tables.parquet_path(SF_SMALL, t))
+        tables._SCHEMA_CACHE.pop(path, None)
+        dfs = []
+        load = lambda: dfs.append(tables.load(spark, SF_SMALL, t))  # noqa: E731
+        assert _jobs_run_by(spark, load) > 0, f"{t}: first load did not infer"
+        assert _jobs_run_by(spark, load) == 0, f"{t}: second load re-inferred"
+        first, second = dfs
+        assert second.dtypes == first.dtypes, t
+        assert _row_hash(second) == _row_hash(first), t
+
+
+def test_load_rewritten_file_reinfers_schema(spark, tmp_path):
+    """A table rewritten under the same path with an added column loads
+    with the new schema: for a single-file table, and for a part file
+    rewritten inside a directory whose own mtime is unchanged."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path)
+    single = tmp_path / "t1.parquet"
+    pq.write_table(pa.table({"k": [1, 2]}), str(single))
+    d = tmp_path / "t2.parquet"
+    d.mkdir()
+    (d / "_SUCCESS").touch()
+    pq.write_table(pa.table({"k": [1, 2]}), str(d / "part-0.parquet"))
+
+    for name in ("t1", "t2"):
+        assert tables.load(spark, sf, name).columns == ["k"]
+        assert tables.load(spark, sf, name).columns == ["k"]  # cached
+    pq.write_table(pa.table({"k": [3], "extra": ["x"]}), str(single))
+    dir_stat = os.stat(d)
+    pq.write_table(pa.table({"k": [3], "extra": ["x"]}), str(d / "part-0.parquet"))
+    os.utime(d, ns=(dir_stat.st_atime_ns, dir_stat.st_mtime_ns))
+    for name in ("t1", "t2"):
+        df = tables.load(spark, sf, name)
+        assert df.columns == ["k", "extra"], name
+        assert [tuple(r) for r in df.collect()] == [(3, "x")], name
+    assert len(
+        [p for p in tables._SCHEMA_CACHE if p.startswith(sf + os.sep)]
+    ) == 2, "one cache entry per path"
+
+
+def test_load_drift_safe_bypasses_schema_cache(spark, tmp_path, monkeypatch):
+    """With a plain-load entry cached for a two-generation directory,
+    CATENA_SCHEMA_DRIFT_SAFE=1 still returns read_drifted's superset
+    schema (the older part lacks ``extra``), not the cached one."""
+    from catena_spark.sources import encodings
+
+    _, md = _write_drift_fixtures(tmp_path)
+    tables.load(spark, str(tmp_path), "missing")
+    monkeypatch.setenv("CATENA_SCHEMA_DRIFT_SAFE", "1")
+    df = tables.load(spark, str(tmp_path), "missing")
+    assert df.schema == encodings.read_drifted(spark, md).schema
+    assert df.columns == ["k", "extra"]
+
+
+def test_stream_events_sees_rewritten_events_schema(spark, tmp_path):
+    """The streaming events reader takes its schema from tables' cache,
+    keyed on the file's version: after events.parquet is rewritten with
+    an added column, the next stream read carries it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from catena_spark.streaming.ops import _stream_events
+
+    ev = pq.read_table(f"{SF_SMALL}/events.parquet")
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(ev, path)
+    before = _stream_events(spark, str(tmp_path))
+    assert before.isStreaming and "extra" not in before.columns
+    pq.write_table(ev.append_column("extra", pa.array(["x"] * ev.num_rows)), path)
+    after = _stream_events(spark, str(tmp_path))
+    assert after.columns == before.columns + ["extra"]
+    assert dict(after.dtypes)["ts"] == "timestamp"
+
+
+def test_package_ship_failure_logs_once(spark, monkeypatch, caplog):
+    """A failed package ship is not fatal (our own sessions import the
+    package from cwd) but is logged on the catena_spark logger, once per
+    process although every load retries the ship."""
+    import logging
+
+    from catena_spark import session
+
+    def fail(_spark):
+        raise OSError("no space left for the package zip")
+
+    monkeypatch.setattr(session, "_ship_package", fail)
+    monkeypatch.setattr(session, "_ship_failure_logged", False)
+    with caplog.at_level(logging.WARNING, logger="catena_spark"):
+        tables.load(spark, SF_SMALL, "region")
+        tables.load(spark, SF_SMALL, "nation")
+    records = [r for r in caplog.records if r.name == "catena_spark"]
+    assert len(records) == 1
+    assert records[0].levelno == logging.WARNING
+    assert "OSError: no space left for the package zip" in records[0].getMessage()
