@@ -412,6 +412,9 @@ def main() -> None:
         "queries": {**prepared, **scaling},
         "queries_cold_plan": cold,
         "sf": float(sf),
+        # the core count the scaling_noop_* probes ran at: bench_guard
+        # compares them only against records stamped with the same count
+        "cpus": cpus,
         # same-run VM-state evidence (r11): the zero-work job quantum,
         # measured AFTER the timed loop at the same conf. This VM's
         # quantum drifts 20->65 ms across hours (hypervisor neighbors —

@@ -17,6 +17,8 @@ every result set non-degenerate.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,6 +37,7 @@ from ..registry import query
 from ..session import env_int
 from ..twophase import global_running_sum
 
+_LOG = logging.getLogger("catena_spark")
 
 #: spark.sql.files.maxPartitionBytes default — only used to ESTIMATE the
 #: scan's split count for the spread decision below; the estimate only has
@@ -97,12 +100,10 @@ _SPREAD_WARNED: set[str] = set()
 def _warn_spread_fallback(name: str) -> None:
     if name not in _SPREAD_WARNED:
         _SPREAD_WARNED.add(name)
-        import sys
-
-        print(
-            f"catena_spark: _spread_input could not list '{name}' input "
-            "files; skipping the input-parallelism fan-out (safe no-op)",
-            file=sys.stderr,
+        _LOG.warning(
+            "_spread_input could not list '%s' input files; skipping the "
+            "input-parallelism fan-out (safe no-op)",
+            name,
         )
 
 

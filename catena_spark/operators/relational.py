@@ -23,10 +23,8 @@ from pyspark.sql import functions as F
 
 from .. import tables
 from ..parity import (
-    det_double,
     duck_det_double,
     duck_usum,
-    rsum,
     spark_det_double,
     usum,
     usum_long,
@@ -89,7 +87,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     division producing bit-identical doubles. Spark sums in decimal(38,0)
     (long would wrap around 9.2e18 — reachable for the 1e-6-unit charge
     sum near ~1e12 rows); DuckDB's BIGINT sum auto-promotes to HUGEINT.
-    r6: that final conversion is det_double/duck_det_double, so the
+    r6: that final conversion is spark_det_double/duck_det_double, so the
     bit-identity survives past 2^63 where the engines' native big-int
     casts round differently (ADVICE r5 item 2); below 2^53 it equals
     the exact conversion — no value change at test scale.
@@ -99,16 +97,8 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying row groups are read.
     """
     li = tables.load(spark, sf_dir, "lineitem")
-    # r18 (VERDICT r17 item 4, cold-plan cost): the seven det_double
-    # limb kernels used to be BUILT as Column trees — ~140 py4j
-    # round-trips each, ~0.65 s of the ~1.4 s cold-plan latency was pure
-    # driver-side Column construction (decomposition in
-    # OPTIMIZATION_r18.md). The same expressions as ONE-string SQL via
-    # parity.spark_det_double parse server-side in milliseconds; the
-    # analyzed tree — and therefore the optimized plan, the physical
-    # plan, and every output bit — is unchanged (bit-equality of the
-    # two kernel forms is pinned across the full decimal(38,0) range by
-    # test_det_double_bit_identical_across_engines).
+    # SQL text, like the oracle: each det_double kernel is one
+    # server-side parse instead of a ~140-call py4j Column tree.
     qi = "CAST(l_quantity AS BIGINT)"
     pc = "CAST(round(l_extendedprice * 100, 0) AS BIGINT)"
     dc = "CAST(round(l_discount * 100, 0) AS BIGINT)"
@@ -205,7 +195,7 @@ def join_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            usum(F.col("o_totalprice"), 2).alias("sum_total"),
+            usum("o_totalprice", 2).alias("sum_total"),
         )
     )
 
@@ -238,9 +228,7 @@ def join_left_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("l_orderkey").alias("n_big_items"),
             # usum_long: <= 7 lineitems per order at ANY scale factor
-            F.coalesce(usum_long(F.col("l_extendedprice"), 2), F.lit(0.0)).alias(
-                "sum_big"
-            ),
+            F.coalesce(usum_long("l_extendedprice", 2), F.lit(0.0)).alias("sum_big"),
         )
     )
 
@@ -375,7 +363,7 @@ def agg_rollup_nation_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     return joined.rollup("r_name", "n_name").agg(
         F.count(F.lit(1)).alias("n_cust"),
-        usum(F.col("c_acctbal"), 2).alias("sum_bal"),
+        usum("c_acctbal", 2).alias("sum_bal"),
     )
 
 
@@ -501,9 +489,7 @@ def topk_revenue_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderkey", "o_orderdate")
         .agg(
             # usum_long: <= 7 lineitems per order at ANY scale factor
-            usum_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            )
+            usum_long("l_extendedprice * (1 - l_discount)", 4).alias("revenue")
         )
         .select(
             "o_orderkey",
@@ -824,7 +810,7 @@ def agg_cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = tables.load(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
-        rsum(F.col("l_quantity")).alias("sum_qty"),
+        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
     )
 
 
@@ -882,7 +868,7 @@ def join_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("r_name") == "ASIA")
     )
     return j.groupBy("n_name").agg(
-        usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue")
+        usum("l_extendedprice * (1 - l_discount)", 4).alias("revenue")
     )
 
 
@@ -1087,9 +1073,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s_name")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            ),
+            usum("l_extendedprice * (1 - l_discount)", 4).alias("revenue"),
         )
     )
 
@@ -1219,9 +1203,7 @@ def join_q7_nation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return j.groupBy("cust_nation", "supp_nation").agg(
         F.count(F.lit(1)).alias("n_items"),
-        usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-            "revenue"
-        ),
+        usum("l_extendedprice * (1 - l_discount)", 4).alias("revenue"),
     )
 
 
@@ -1265,9 +1247,7 @@ def join_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            ),
+            usum("l_extendedprice * (1 - l_discount)", 4).alias("revenue"),
         )
     )
 
@@ -1529,11 +1509,12 @@ def agg_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtract, IEEE sqrt, divide — no round, no engine internals.
 
     r6 (ADVICE r5 item 2): the moment->double casts go through
-    det_double/duck_det_double because the squared price moments reach
-    1e23–1e24 at sf0.1 — far past 2^63, where DuckDB's double-rounded
-    HUGEINT cast and Spark's correctly rounded decimal cast can differ
-    by 1 ulp near a rounding boundary. The limb-split conversion is
-    bit-identical in both engines at any magnitude.
+    spark_det_double/duck_det_double because the squared price moments
+    reach 1e23–1e24 at sf0.1 — far past 2^63, where DuckDB's
+    double-rounded HUGEINT cast and Spark's correctly rounded decimal
+    cast can differ by 1 ulp near a rounding boundary. The limb-split
+    conversion is bit-identical in both engines at any magnitude. The
+    outer select is SQL text, so it reads line for line like the oracle.
 
     Scale: the moment sums are plain partial-aggregatable SUMs — same
     single-pass shuffle shape as the built-in aggregates they replace.
@@ -1565,29 +1546,17 @@ def agg_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((pc * pc).cast(dec)).alias("spc2"),
         F.sum((qi * pc).cast(dec)).alias("sqp"),
     )
-    n, sq, sq2 = F.col("n"), F.col("sq"), F.col("sq2")
-    sdc, sdc2 = F.col("sdc"), F.col("sdc2")
-    spc, spc2, sqp = F.col("spc"), F.col("spc2"), F.col("sqp")
-    varq = det_double(n * sq2 - sq * sq) / det_double(n * (n - 1))
-    return m.select(
+    dd = spark_det_double
+    var_qty = f"{dd('n * sq2 - sq * sq')} / {dd('n * (n - 1)')}"
+    return m.selectExpr(
         "l_returnflag",
-        F.sqrt(varq).alias("sd_qty"),
-        varq.alias("var_qty"),
-        F.sqrt(
-            det_double(n * sdc2 - sdc * sdc) / det_double(n * n * 10000)
-        ).alias("sdp_disc"),
-        (
-            det_double(n * sqp - sq * spc)
-            / (
-                F.sqrt(det_double(n * sq2 - sq * sq))
-                * F.sqrt(det_double(n * spc2 - spc * spc))
-            )
-        ).alias("corr_qty_price"),
-        (
-            det_double(n * sqp - sq * spc)
-            / det_double(n * (n - 1))
-            / F.lit(100.0)
-        ).alias("covar_qty_price"),
+        f"sqrt({var_qty}) AS sd_qty",
+        f"{var_qty} AS var_qty",
+        f"sqrt({dd('n * sdc2 - sdc * sdc')} / {dd('n * n * 10000')}) AS sdp_disc",
+        f"{dd('n * sqp - sq * spc')}"
+        f" / (sqrt({dd('n * sq2 - sq * sq')}) * sqrt({dd('n * spc2 - spc * spc')}))"
+        " AS corr_qty_price",
+        f"{dd('n * sqp - sq * spc')} / {dd('n * (n - 1)')} / 100.0D AS covar_qty_price",
     )
 
 
@@ -1680,9 +1649,7 @@ def join_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             # usum_long: returned items per customer-year is ~constant
             # per the schema (orders/customer and items/order are both
             # bounded), so the 1e-4-unit sum stays ~1e11 at any SF
-            usum_long(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            )
+            usum_long("l_extendedprice * (1 - l_discount)", 4).alias("revenue")
         )
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
@@ -1764,8 +1731,8 @@ def join_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1997-06-01") & (F.col("l_shipdate") < "1997-07-01")
     )
     p = tables.load(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0.0))
+    rev = "l_extendedprice * (1 - l_discount)"
+    promo = f"CASE WHEN p_type LIKE 'PROMO%' THEN {rev} ELSE 0.0D END"
     out = li.join(p, li.l_partkey == p.p_partkey).agg(
         usum(promo, 4).alias("promo_rev"),
         usum(rev, 4).alias("total_rev"),
@@ -1808,7 +1775,7 @@ def agg_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = tables.load(spark, sf_dir, "lineitem")
     qty = (
         li.groupBy("l_orderkey")
-        .agg(rsum("l_quantity", 2).alias("total_qty"))
+        .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
         .where(F.col("total_qty") > 300)
     )
     return (
@@ -1882,7 +1849,7 @@ def subq_q22_idle_wealthy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).cast("long").alias("numcust"),
-            usum(F.col("c_acctbal"), 2).alias("totacctbal"),
+            usum("c_acctbal", 2).alias("totacctbal"),
         )
     )
 
@@ -1924,9 +1891,7 @@ def join_q9_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = tables.load(spark, sf_dir, "part").where(F.col("p_name").like("%gear%"))
     s = tables.load(spark, sf_dir, "supplier")
     n = tables.load(spark, sf_dir, "nation")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
+    profit = "l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity"
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -1989,7 +1954,7 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     sn = tables.load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("sn_name")
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     # r18 (guide §3.2 — shrink before the big join): the ASIA-region
     # customer filter is the query's only selective predicate (~1 of 5
     # regions), but it used to apply AFTER lineitem⋈orders, so the
@@ -2021,7 +1986,7 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), s.s_nationkey == F.col("sn_key"))
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
-            usum(F.when(F.col("sn_name") == "NATION_5", rev).otherwise(0.0), 4)
+            usum(f"CASE WHEN sn_name = 'NATION_5' THEN {rev} ELSE 0.0D END", 4)
                 .alias("nation_rev"),
             usum(rev, 4).alias("total_rev"),
         )
@@ -2067,9 +2032,7 @@ def subq_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = tables.load(spark, sf_dir, "supplier")
     rev = li.groupBy("l_suppkey").agg(
-        usum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-            "total_rev"
-        )
+        usum("l_extendedprice * (1 - l_discount)", 4).alias("total_rev")
     )
     mx = rev.agg(F.max("total_rev").alias("mx"))
     return (
@@ -2112,7 +2075,7 @@ def agg_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.05, 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        usum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias("revenue"),
+        usum("l_extendedprice * l_discount", 4).alias("revenue"),
         F.count(F.lit(1)).cast("long").alias("n_items"),
     )
 

@@ -12,9 +12,13 @@ follows these rules — on BOTH sides:
    (usum/usum_long + duck_usum): quantize to cents / 1e-4 / 1e-6
    units, sum exactly (order-free), ONE final deterministic
    cast+division — bit-identical doubles with no round() at all.
-   r6: the final cast is det_double/duck_det_double (limb-split), so
-   bit-identity survives past 2^63 where the engines' native
-   big-integer casts round differently.
+   r6: the final cast is spark_det_double/duck_det_double
+   (limb-split), so bit-identity survives past 2^63 where the engines'
+   native big-integer casts round differently. Both are SQL text:
+   spark_det_double is the ONE Spark-side kernel (usum/usum_long take
+   SQL text too and return a single ``F.expr``), so each kernel is
+   parsed server-side in one py4j call instead of being built as a
+   Column tree, and the Spark and DuckDB forms read side by side.
    r5 superseded the old round-at-the-exact-scale rule, which breaks
    two ways at scale: (a) once |sum| * 2^-52 approaches the round grid
    (a 2.8e9 sum has ulp 4.8e-7, above half of 1e-6), engines summing
@@ -48,43 +52,38 @@ def duck_ts(expr: str) -> str:
     return f"strftime(CAST(({expr}) AS TIMESTAMP), '%Y-%m-%d %H:%M:%S')"
 
 
-def rsum(col: Column, scale: int = 2) -> Column:
-    """round(sum(x), 2) — parity rule #3 (LEGACY — see usum).
+def usum(expr: str, scale: int) -> Column:
+    """ORDER-FREE exact sum of a decimal-exact SQL expression (r5).
 
-    r5 finding: rounding a FLOAT sum is order-sensitive once
-    |sum| * 2^-52 approaches the round grid — Spark's partial-agg
-    accumulation order varies with task scheduling, so a near-tie key
-    can flake run-to-run. Kept only for callers whose group sums are
-    provably far from the grid (small groups of decimal-exact values);
-    new money aggregates use usum/usum_long.
-    """
-    return F.round(F.sum(col), scale)
-
-
-def usum(col: Column, scale: int) -> Column:
-    """ORDER-FREE exact sum of a decimal-exact expression (r5).
-
-    ``col``'s true value must be decimal-exact at ``scale`` (e.g. a
+    ``expr``'s true value must be decimal-exact at ``scale`` (e.g. a
     2-dec price at 2; price*(1-disc) at 4; *(1+tax) at 6). Rounding
-    col*10^scale to integer units is unambiguous (float noise ~1e-9 ulp
+    expr*10^scale to integer units is unambiguous (float noise ~1e-9 ulp
     vs a 0.5 margin), the unit sum in decimal(38,0) is exact in ANY
     accumulation order (no long wraparound at 1e-6-unit 100 TB sums;
     DuckDB's BIGINT sum auto-promotes to HUGEINT), and the single final
     cast+division is deterministic in both engines — bit-identical
-    doubles with no round() tie to break. SQL twin: duck_usum.
+    doubles with no round() tie to break. SQL twin: duck_usum, which
+    takes the same ``expr`` text.
 
-    r6: the final cast goes through det_double, so the bit-identity
+    The final cast goes through spark_det_double, so the bit-identity
     claim holds even once the unit sum passes 2^63 (the 100 TB regime
     where DuckDB's double-rounded HUGEINT cast and Spark's correctly
     rounded decimal cast can differ by 1 ulp near a boundary); below
-    2^53 det_double equals the exact conversion, so values at every
-    test scale factor are unchanged from r5.
+    2^53 it equals the exact conversion.
+
+    Returns ONE ``F.expr`` Column (an aggregate, for ``.agg()``): the
+    whole kernel is parsed server-side in a single py4j call. The scale
+    factor is written ``{float(10**scale)!r}D`` because Spark SQL reads
+    a bare ``100.0`` as a DECIMAL literal; the ``D`` suffix makes it the
+    DOUBLE the unit rounding and final division need.
     """
-    u = F.round(col * F.lit(float(10**scale)), 0).cast("long")
-    return det_double(F.sum(u.cast("decimal(38,0)"))) / F.lit(float(10**scale))
+    m = f"{float(10**scale)!r}D"
+    units = f"CAST(round(({expr}) * {m}, 0) AS BIGINT)"
+    total = spark_det_double(f"sum(CAST({units} AS DECIMAL(38,0)))")
+    return F.expr(f"{total} / {m}")
 
 
-def usum_long(col: Column, scale: int) -> Column:
+def usum_long(expr: str, scale: int) -> Column:
     """usum variant ACCUMULATING in BIGINT instead of decimal(38,0) —
     ~10% cheaper per Spark row (A/B-measured on TPC-H Q3 at sf0.1).
     ONLY for groups whose row count is schema-bounded and does not grow
@@ -95,22 +94,20 @@ def usum_long(col: Column, scale: int) -> Column:
     usum. The DuckDB twin is the same duck_usum — DuckDB always sums
     BIGINT into HUGEINT.
 
-    r7 (ADVICE r6 item 1): the final cast routes through det_double like
-    usum's, so bit-parity with duck_usum holds over the FULL long range
-    — previously a unit sum landing in [2^53, 2^63) would have drifted
-    ~1 ulp from the oracle's duck_det_double path. det_double runs
-    post-aggregation on one row per group, so the per-row BIGINT
-    accumulation (the reason this variant exists) is unchanged."""
-    u = F.round(col * F.lit(float(10**scale)), 0).cast("long")
-    return det_double(F.sum(u).cast("decimal(38,0)")) / F.lit(float(10**scale))
+    The BIGINT sum is widened to decimal(38,0) once per group and then
+    goes through spark_det_double like usum's, so bit-parity with
+    duck_usum holds over the FULL long range, not just below 2^53. Same
+    text contract and ``D`` literal as usum."""
+    m = f"{float(10**scale)!r}D"
+    units = f"CAST(round(({expr}) * {m}, 0) AS BIGINT)"
+    total = spark_det_double(f"CAST(sum({units}) AS DECIMAL(38,0))")
+    return F.expr(f"{total} / {m}")
 
 
 def duck_usum(expr: str, scale: int) -> str:
-    """DuckDB twin of usum — identical unit/divide structure; the final
-    cast goes through duck_det_double (r6), matching usum bit-for-bit at
-    any magnitude. Also the twin of usum_long, whose final cast routes
-    through det_double as of r7, so the twins agree over the full BIGINT
-    range, not just below 2^53."""
+    """DuckDB twin of usum and usum_long — identical unit/divide
+    structure; the final cast goes through duck_det_double, matching
+    both Spark forms bit-for-bit at any magnitude."""
     m = 10**scale
     s = f"sum(CAST(round(({expr}) * {m}, 0) AS BIGINT))"
     return f"({duck_det_double(s)} / {m}.0)"
@@ -118,23 +115,25 @@ def duck_usum(expr: str, scale: int) -> str:
 
 #: |x| <= 2^53 is exactly representable in an IEEE double, so BOTH
 #: engines' native integer->double casts equal the mathematically exact
-#: conversion below it — the shared fast-path predicate of det_double
-#: and duck_det_double (r10, ADVICE r9 item 4: one constant interpolated
-#: into both twins so the branch predicates can never drift apart).
+#: conversion below it — the shared fast-path predicate of
+#: spark_det_double and duck_det_double (one constant interpolated into
+#: both kernels so the branch predicates can never drift apart).
 DOUBLE_EXACT_MAX = 2**53
 
 
-def det_double(x: Column) -> Column:
-    """Deterministic exact-integer -> DOUBLE conversion, bit-identical in
-    Spark and DuckDB over the FULL decimal(38,0)/HUGEINT range (r6,
-    ADVICE r5 item 2).
+def spark_det_double(expr: str) -> str:
+    """Deterministic exact-integer -> DOUBLE conversion as Spark SQL
+    text, bit-identical to duck_det_double over the FULL
+    decimal(38,0)/HUGEINT range (r6). The ONE Spark-side kernel: usum,
+    usum_long, agg_pricing_summary and agg_stats_suite all route their
+    big-integer casts through it; wrap it in ``F.expr``/``selectExpr``.
 
     Why: beyond 2^63 the engines' native big-integer->double casts round
     differently — DuckDB converts HUGEINT as (double)lower +
     (double)upper*2^64 (double rounding), Spark's decimal(38,0)->double
     is correctly rounded — so near a rounding boundary they can differ
     by 1 ulp. That is exactly the rare-systematic divergence class the
-    r5 integer-unit doctrine eliminates, reintroduced at the very last
+    integer-unit doctrine eliminates, reintroduced at the very last
     cast. (The squared price moments in agg_stats_suite reach 1e23–1e24
     at sf0.1; 1e-6-unit money sums pass 2^63 around the 100 TB mark.)
 
@@ -142,66 +141,24 @@ def det_double(x: Column) -> Column:
     limb < 2^53 so each limb->double cast is EXACT in any engine), then
     recombine with the identical IEEE-754 multiply/add sequence
     ``((l3*1e9 + l2)*1e9 + l1)*1e9 + l0`` — correctly-rounded primitives
-    on bit-identical inputs, hence bit-identical results. For |x| < 2^53
-    every intermediate is exact, so the result equals the mathematically
-    exact conversion (no value change at test scale factors). Beyond
-    2^53 the result may differ from the correctly-rounded conversion by
-    ~1 ulp but is the SAME double in both engines — determinism is the
-    parity requirement, not last-ulp accuracy. SQL twin: duck_det_double
-    (arithmetic limb extraction — same limb values, same combine).
-
-    Spark side extracts limbs by lpad/substring over the decimal's digit
-    string (decimal(38,0) renders as plain digits) because Column-level
-    integral division isn't expressible inside an unnamed aggregate
-    expression; this runs post-aggregation, one row per group. The
-    absolute value is taken by stripping the '-' from the digit string,
-    NOT F.abs: Spark's decimal negate/abs round through a 34-digit
+    on bit-identical inputs, hence bit-identical results. Beyond 2^53
+    the result may differ from the correctly-rounded conversion by ~1
+    ulp but is the SAME double in both engines — determinism is the
+    parity requirement, not last-ulp accuracy. Limbs come from the
+    decimal's digit string (decimal(38,0) renders as plain digits); the
+    absolute value strips the '-' from that string instead of abs(),
+    because Spark's decimal negate/abs round through a 34-digit
     DECIMAL128 MathContext, which mangles (or ANSI-errors on) wider
-    values — string abs keeps the helper exact over the full range.
+    values.
 
-    r9 (VERDICT r7/r8 item 1): values with |x| <= 2^53 take the native
-    decimal->double cast instead of the string-limb kernel. Parity-safe
-    by the exactness argument above — below 2^53 BOTH the native cast
-    and the limb combine equal the mathematically exact conversion, so
-    the branch cannot change any result; duck_det_double branches on the
-    identical predicate so the twins stay structurally matched. This
-    undoes the A/B-measured 1.75x q3_join_topk regression from routing
-    usum_long through the limb kernel (r7): per-group money sums at test
-    scale factors are far below 2^53, so the hot path is again a single
-    native cast, and the limb kernel runs only in the >2^53 regime it
-    exists for.
-    """
-    xd = x.cast("decimal(38,0)")
-    digits = F.lpad(F.regexp_replace(xd.cast("string"), "^-", ""), 38, "0")
-    l3 = F.substring(digits, 1, 11).cast("long").cast("double")
-    l2 = F.substring(digits, 12, 9).cast("long").cast("double")
-    l1 = F.substring(digits, 21, 9).cast("long").cast("double")
-    l0 = F.substring(digits, 30, 9).cast("long").cast("double")
-    mag = ((l3 * F.lit(1.0e9) + l2) * F.lit(1.0e9) + l1) * F.lit(1.0e9) + l0
-    limb = F.when(x < 0, -mag).otherwise(mag)
-    return F.when(
-        xd.between(F.lit(-DOUBLE_EXACT_MAX), F.lit(DOUBLE_EXACT_MAX)),
-        xd.cast("double"),
-    ).otherwise(limb)
-
-
-def spark_det_double(expr: str) -> str:
-    """det_double as Spark SQL TEXT (r18, VERDICT r17 item 4) — the
-    IDENTICAL expression tree to det_double(Column), built by one
-    server-side parse instead of ~140 py4j round-trips per call site.
-
-    Why it exists: agg_pricing_summary's cold-plan cost was ~1.4 s, of
-    which ~0.65 s was pure py4j Column construction of seven inlined
-    limb kernels (measured r18, OPTIMIZATION_r18.md). Routing the hot
-    call sites through ``F.expr(spark_det_double(...))`` keeps the
-    analyzed/optimized/physical plan — and hence every output bit —
-    unchanged while construction collapses to a handful of calls.
-
-    Kept structurally in lockstep with det_double above (same digits
-    string, same limb positions, same IEEE combine, same
-    DOUBLE_EXACT_MAX fast-path predicate) and pinned bit-identical to
-    it across the full decimal(38,0) range by
-    tests/test_properties.py::test_det_double_bit_identical_across_engines.
+    Fast path (r9): |x| <= DOUBLE_EXACT_MAX takes the native cast —
+    below 2^53 both the native cast and the limb combine equal the
+    exact conversion, so the branch cannot change a result, and the
+    limb kernel runs only in the regime it exists for. The predicate is
+    spelled ``x >= -2^53L AND x <= 2^53L``, not ``BETWEEN``: Spark 4.1
+    rewrites SQL BETWEEN into a ``With``/``_common_expr_N`` projection,
+    an extra plan node the two comparisons do not need. The ``L``
+    suffix makes the bounds BIGINT literals.
     """
     xd = f"CAST(({expr}) AS DECIMAL(38,0))"
     digits = f"lpad(regexp_replace(CAST({xd} AS STRING), '^-', ''), 38, '0')"
@@ -212,19 +169,20 @@ def spark_det_double(expr: str) -> str:
     mag = f"((({l3} * 1.0E9 + {l2}) * 1.0E9 + {l1}) * 1.0E9 + {l0})"
     limb = f"(CASE WHEN ({expr}) < 0 THEN -{mag} ELSE {mag} END)"
     return (
-        f"(CASE WHEN {xd} BETWEEN -{DOUBLE_EXACT_MAX}L AND {DOUBLE_EXACT_MAX}L "
+        f"(CASE WHEN {xd} >= -{DOUBLE_EXACT_MAX}L AND {xd} <= {DOUBLE_EXACT_MAX}L "
         f"THEN CAST({xd} AS DOUBLE) ELSE {limb} END)"
     )
 
 
 def duck_det_double(expr: str) -> str:
-    """DuckDB twin of det_double — same limbs via HUGEINT ``//``/``%``,
-    same IEEE combine sequence. Valid over the full HUGEINT range.
+    """DuckDB twin of spark_det_double — same limbs via HUGEINT
+    ``//``/``%``, same IEEE combine sequence. Valid over the full
+    HUGEINT range.
 
-    r9: branches on the identical |x| <= 2^53 predicate as det_double's
-    fast path; DuckDB's HUGEINT->DOUBLE cast is exact below 2^53, so
-    both twins' fast branches equal the exact conversion and parity is
-    preserved by construction."""
+    r9: branches on the identical |x| <= 2^53 predicate as
+    spark_det_double's fast path; DuckDB's HUGEINT->DOUBLE cast is exact
+    below 2^53, so both twins' fast branches equal the exact conversion
+    and parity is preserved by construction."""
     a = f"abs(CAST(({expr}) AS HUGEINT))"
     l3 = f"CAST(({a} // 1000000000000000000000000000) AS DOUBLE)"
     l2 = f"CAST((({a} % 1000000000000000000000000000) // 1000000000000000000) AS DOUBLE)"

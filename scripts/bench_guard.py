@@ -18,7 +18,10 @@ BENCH_r*.json artifacts in the repo root. The median (not mean) is used
 so one already-regressed round in the window cannot drag the reference
 up and mask a persistent regression — exactly the q3 r7/r8 shape.
 Queries with no history (newly added to bench.py) are skipped with a
-note rather than failed. Exit 0 = all queries within budget.
+note rather than failed. The ``scaling_noop_*`` probes scale ~2x with
+the session's core count, so they are judged only against history
+records stamped with the same ``cpus`` as the current run, and skipped
+with a note when there are none. Exit 0 = all queries within budget.
 """
 
 from __future__ import annotations
@@ -47,20 +50,16 @@ ABS_FLOOR_SEC = 0.015
 #: is demonstrated by at least this many in-window samples (mirrors
 #: _ratchet_hit's >= 3-sample requirement to TRIP).
 EXPIRE_MIN_SAMPLES = 3
+#: queries whose latency tracks the core count (bench.py SCALING_QUERIES):
+#: compared like for like, same ``cpus`` stamp only
+SCALING_PREFIX = "scaling_noop_"
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def parse_bench_line(
-    path: str,
-) -> tuple[dict[str, float], list[int], dict]:
-    """(queries, contended_with_pids, vm_quantum) from the last bench
-    JSON line.
-
-    A non-empty pid list means bench.py saw other Spark JVMs on the
-    machine when it started (r10: that shape inflated all five queries
-    uniformly 1.4-1.6x) — the sample is unreliable in BOTH directions
-    and must not be adjudicated against the trailing medians at all."""
+def last_bench_record(path: str) -> dict:
+    """The last JSON line in ``path`` that carries a {"queries": {...}}
+    object (the bench output may be wrapped in log noise)."""
     found = None
     with open(path, encoding="utf-8") as f:
         for line in f:
@@ -75,6 +74,20 @@ def parse_bench_line(
                 found = obj
     if found is None:
         sys.exit(f"bench_guard: no bench JSON line with 'queries' found in {path}")
+    return found
+
+
+def parse_bench_line(
+    path: str,
+) -> tuple[dict[str, float], list[int], dict]:
+    """(queries, contended_with_pids, vm_quantum) from the last bench
+    JSON line.
+
+    A non-empty pid list means bench.py saw other Spark JVMs on the
+    machine when it started (r10: that shape inflated all five queries
+    uniformly 1.4-1.6x) — the sample is unreliable in BOTH directions
+    and must not be adjudicated against the trailing medians at all."""
+    found = last_bench_record(path)
     return (
         {k: float(v) for k, v in found["queries"].items()},
         list(found.get("contended_with_pids") or []),
@@ -82,12 +95,16 @@ def parse_bench_line(
     )
 
 
-def round_records() -> list[dict[str, float]]:
+def round_records(cpus: int | None = None) -> list[dict[str, float]]:
     """Per-round parsed query timings from ALL BENCH_r*.json artifacts,
     in round order, contention-stamped and unreadable rounds dropped
     (with a note). Callers window this; keeping the full clean list
     means excluding a contended round no longer SHRINKS the window
-    (ADVICE r10) — the window just reaches one round further back."""
+    (ADVICE r10) — the window just reaches one round further back.
+
+    ``scaling_noop_*`` timings are kept only from records whose ``cpus``
+    stamp (bench.py's own, else the round record's) equals ``cpus``;
+    with ``cpus`` None there is no like-for-like history for them."""
 
     def round_no(p: str) -> int:
         m = re.search(r"BENCH_r(\d+)\.json$", p)
@@ -98,7 +115,8 @@ def round_records() -> list[dict[str, float]]:
     for p in paths:
         try:
             with open(p, encoding="utf-8") as f:
-                parsed = json.load(f).get("parsed") or {}
+                obj = json.load(f)
+            parsed = obj.get("parsed") or {}
             if parsed.get("contended_with_pids"):
                 # a contention-stamped round record is as unreliable as
                 # a reference as it is as a sample — keep it out of the
@@ -108,8 +126,15 @@ def round_records() -> list[dict[str, float]]:
                     "from trailing history"
                 )
                 continue
+            same_cpus = cpus is not None and parsed.get(
+                "cpus", obj.get("cpus")
+            ) == cpus
             records.append(
-                {k: float(v) for k, v in (parsed.get("queries") or {}).items()}
+                {
+                    k: float(v)
+                    for k, v in (parsed.get("queries") or {}).items()
+                    if same_cpus or not k.startswith(SCALING_PREFIX)
+                }
             )
         except (OSError, json.JSONDecodeError, TypeError, ValueError) as e:
             print(f"bench_guard: skipping unreadable {os.path.basename(p)}: {e}")
@@ -268,7 +293,8 @@ def check(current: dict[str, float], hist: dict[str, list[float]]) -> list[str]:
     for q, now in sorted(current.items()):
         past = hist.get(q)
         if not past:
-            print(f"bench_guard: {q}: no trailing history, skipped")
+            at = " at this core count" if q.startswith(SCALING_PREFIX) else ""
+            print(f"bench_guard: {q}: no trailing history{at}, skipped")
             continue
         med = statistics.median(past)
         budget = max(med * REGRESSION_FACTOR, med + ABS_FLOOR_SEC)
@@ -297,6 +323,7 @@ def main() -> None:
     if len(sys.argv) != 2:
         sys.exit(__doc__)
     current, contended, quantum = parse_bench_line(sys.argv[1])
+    cpus = last_bench_record(sys.argv[1]).get("cpus")
     if quantum:
         q1 = quantum.get("job_1shuffle")
         state = ""
@@ -314,7 +341,7 @@ def main() -> None:
             "and unreliable in both directions; re-run bench on an idle "
             "machine (no pass, no fail, no median adjudication)"
         )
-    records = round_records()
+    records = round_records(cpus)
     failures = check(current, trailing_history(records))
     accepted = load_accepted()
     accepted, expired = expire_accepted(records, accepted)

@@ -200,6 +200,36 @@ def test_window_reaches_past_contended_rounds(tmp_path, monkeypatch):
     assert hist == {"q1": [0.041, 0.042, 0.043, 0.044, 0.045]}
 
 
+def test_scaling_probe_judged_only_at_same_core_count(tmp_path, monkeypatch, capsys):
+    """ADVICE r18: the scaling_noop_* probes run ~2x slower at half the
+    cores. History stamped with a different ``cpus`` must not judge them
+    (skipped with a note), while same-cpus history still does."""
+    import json
+
+    import pytest
+
+    key = "scaling_noop_llm_minhash_pairs"
+    for rn in range(5, 10):
+        (tmp_path / f"BENCH_r{rn:02d}.json").write_text(
+            json.dumps({"cpus": 8, "parsed": {"queries": {"q1": 0.040, key: 1.0}}})
+        )
+    monkeypatch.setattr(bench_guard, "REPO", str(tmp_path))
+
+    slower = {"queries": {"q1": 0.040, key: 2.0}, "cpus": 4}
+    path = _write_bench_line(tmp_path, slower)
+    monkeypatch.setattr(bench_guard.sys, "argv", ["bench_guard.py", path])
+    bench_guard.main()  # exit 0: no like-for-like history for the probe
+    out = capsys.readouterr().out
+    assert f"{key}: no trailing history at this core count, skipped" in out
+    assert "q1: now=40.0ms" in out  # the flagship keys are still judged
+
+    path = _write_bench_line(tmp_path, {**slower, "cpus": 8})
+    monkeypatch.setattr(bench_guard.sys, "argv", ["bench_guard.py", path])
+    with pytest.raises(SystemExit) as ei:
+        bench_guard.main()
+    assert ei.value.code == 1
+
+
 def _records(vals):
     return [{"q1": v} for v in vals]
 

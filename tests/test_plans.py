@@ -181,7 +181,7 @@ def test_ewma_single_exchange_partition_fold(spark):
 
 
 def test_q3_det_double_fast_path_survives_optimizer(spark):
-    """The r9 sub-2^53 fast path in parity.det_double (VERDICT r7/r8
+    """The r9 sub-2^53 fast path in parity.spark_det_double (VERDICT r7/r8
     item 1) must stay on q3's final-cast hot path: Catalyst renders it
     as a CASE bounded by +/-9007199254740992 around the native cast,
     with the string-limb kernel (lpad) demoted to the >2^53 escape

@@ -19,6 +19,7 @@ import shutil
 import tempfile
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -606,19 +607,19 @@ def test_decimal_threshold_predicate_exact_within_envelope(spark):
 
 
 def test_det_double_bit_identical_across_engines(spark, duck):
-    """det_double/duck_det_double (r6, ADVICE r5 item 2): the limb-split
-    big-integer->double conversion must produce the SAME double in
-    Spark, DuckDB, and a pure-Python reference at every magnitude of the
-    decimal(38,0)/HUGEINT range — and the mathematically exact value
-    below 2^53. This is what lets usum/usum_long/agg_stats_suite keep their
-    bit-identity claim past 2^63, where the engines' native casts
+    """spark_det_double/duck_det_double (r6, ADVICE r5 item 2): the
+    limb-split big-integer->double conversion must produce the SAME
+    double in Spark, DuckDB, and a pure-Python reference at every
+    magnitude of the decimal(38,0)/HUGEINT range — and the
+    mathematically exact value below 2^53. This is what lets
+    usum/usum_long/agg_stats_suite keep their bit-identity claim past 2^63, where the engines' native casts
     (DuckDB's double-rounded HUGEINT path vs Spark's correctly rounded
     decimal path) can differ by 1 ulp."""
     import random
 
     from pyspark.sql import functions as F
 
-    from catena_spark.parity import det_double, duck_det_double
+    from catena_spark.parity import duck_det_double, spark_det_double
 
     def py_det(x: int) -> float:
         a = abs(x)
@@ -643,19 +644,8 @@ def test_det_double_bit_identical_across_engines(spark, duck):
         [(_d.Decimal(x),) for x in cases], "v decimal(38,0)"
     )
     got_spark = [
-        r["d"] for r in sdf.select(det_double(F.col("v")).alias("d")).collect()
-    ]
-    # r18: the SQL-text twin (parity.spark_det_double, the q1 cold-plan
-    # fix) must stay bit-identical to the Column kernel at every
-    # magnitude — one rendering drifting would silently fork the
-    # flagship's semantics from every other det_double call site.
-    from catena_spark.parity import spark_det_double
-
-    got_spark_sql = [
         r["d"]
-        for r in sdf.select(
-            F.expr(spark_det_double("v")).alias("d")
-        ).collect()
+        for r in sdf.select(F.expr(spark_det_double("v")).alias("d")).collect()
     ]
     got_duck = [
         duck.execute(
@@ -663,9 +653,9 @@ def test_det_double_bit_identical_across_engines(spark, duck):
         ).fetchone()[0]
         for x in cases
     ]
-    for x, ds, dsql, dd in zip(cases, got_spark, got_spark_sql, got_duck):
+    for x, ds, dd in zip(cases, got_spark, got_duck):
         want = py_det(x)
-        assert ds == dsql == dd == want, (x, ds, dsql, dd, want)
+        assert ds == dd == want, (x, ds, dd, want)
         if abs(x) < 2**53:
             assert ds == float(x), (x, ds)
 
@@ -698,20 +688,22 @@ def test_integer_halfup_avg_threshold_matches_reference(duck):
         assert got_py == want == got_duck, (s, n, got_py, got_duck, want)
 
 
-def test_usum_long_matches_duck_usum_past_2pow53(spark, duck):
-    """usum_long ≡ duck_usum over the FULL BIGINT unit-sum range (r7,
-    ADVICE r6 item 1): before r7 usum_long's final cast was Spark's
+@pytest.mark.parametrize("kernel", ["usum", "usum_long"])
+def test_usum_long_matches_duck_usum_past_2pow53(spark, duck, kernel):
+    """usum/usum_long ≡ duck_usum over the FULL BIGINT unit-sum range
+    (r7, ADVICE r6 item 1): before r7 usum_long's final cast was Spark's
     native long->double, which only matches the oracle's duck_det_double
     path below 2^53 — a unit sum in [2^53, 2^63) would drift ~1 ulp.
-    Now both route through det_double, so the twins must be
-    bit-identical (and equal to the pure-Python limb reference) at every
-    magnitude. Inputs are multiples of 10^13 so value*10^scale
-    round-trips exactly through double in both engines."""
+    Both Spark sums route through spark_det_double, so each must be
+    bit-identical to duck_usum (and equal to the pure-Python limb
+    reference) at every magnitude. Inputs are multiples of 10^13 so
+    value*10^scale round-trips exactly through double in both engines."""
     import random
 
-    from pyspark.sql import functions as F
+    from catena_spark import parity
+    from catena_spark.parity import duck_usum
 
-    from catena_spark.parity import duck_usum, usum_long
+    usum_fn = getattr(parity, kernel)
 
     rng = random.Random(20260814)
 
@@ -746,7 +738,7 @@ def test_usum_long_matches_duck_usum_past_2pow53(spark, duck):
     sdf = spark.createDataFrame(rows, "g string, v double")
     got_spark = {
         r["g"]: r["s"]
-        for r in sdf.groupBy("g").agg(usum_long(F.col("v"), 2).alias("s")).collect()
+        for r in sdf.groupBy("g").agg(usum_fn("v", 2).alias("s")).collect()
     }
     duck.execute("CREATE OR REPLACE TABLE t_usum_long(g VARCHAR, v DOUBLE)")
     duck.executemany("INSERT INTO t_usum_long VALUES (?, ?)", rows)
@@ -768,11 +760,12 @@ def test_usum_long_matches_duck_usum_past_2pow53(spark, duck):
 
 
 def test_det_double_fast_path_straddles_2pow53(spark, duck):
-    """r9 (VERDICT r7/r8 item 1): det_double's sub-2^53 native-cast fast
-    path must be invisible at the value level — for every integer, the
-    Spark kernel, the DuckDB twin, and a pure-Python limb/native
-    reference that branches on the identical predicate produce the SAME
-    double, including exactly at 2^53 +/- 1 where the branch flips.
+    """r9 (VERDICT r7/r8 item 1): spark_det_double's sub-2^53
+    native-cast fast path must be invisible at the value level — for
+    every integer, the Spark kernel, the DuckDB twin, and a pure-Python
+    limb/native reference that branches on the identical predicate
+    produce the SAME double, including exactly at 2^53 +/- 1 where the
+    branch flips.
     Inputs are fed as exact decimal(38,0)/HUGEINT literals (no float
     round-trip), so this pins the cast kernel itself, not usum's
     quantization."""
@@ -780,7 +773,7 @@ def test_det_double_fast_path_straddles_2pow53(spark, duck):
 
     from pyspark.sql import functions as F
 
-    from catena_spark.parity import det_double, duck_det_double
+    from catena_spark.parity import duck_det_double, spark_det_double
 
     P = 2**53  # 9007199254740992
 
@@ -806,8 +799,10 @@ def test_det_double_fast_path_straddles_2pow53(spark, duck):
 
     sdf = spark.createDataFrame(
         [(str(v),) for v in vals], "v_str string"
-    ).select(det_double(F.col("v_str").cast("decimal(38,0)")).alias("d"),
-             F.col("v_str"))
+    ).select(
+        F.expr(spark_det_double("CAST(v_str AS DECIMAL(38,0))")).alias("d"),
+        F.col("v_str"),
+    )
     got_spark = {r["v_str"]: r["d"] for r in sdf.collect()}
     for v in vals:
         got_duck = duck.execute(
@@ -823,17 +818,15 @@ def test_det_double_fast_path_straddles_2pow53(spark, duck):
 
 def test_det_double_twins_share_fast_path_constant():
     """ADVICE r9 item 4: the twins' fast-path branch predicates must be
-    derived from the SAME module constant — the Spark Column literal and
-    the DuckDB SQL text both carry DOUBLE_EXACT_MAX, so one edit moves
-    both branches (or neither)."""
-    from catena_spark.parity import DOUBLE_EXACT_MAX, det_double, duck_det_double
-    from pyspark.sql import functions as F
+    derived from the SAME module constant — the Spark and DuckDB SQL
+    texts both carry DOUBLE_EXACT_MAX, so one edit moves both branches
+    (or neither)."""
+    from catena_spark.parity import DOUBLE_EXACT_MAX, duck_det_double, spark_det_double
 
     assert DOUBLE_EXACT_MAX == 2**53
-    # SQL twin interpolates the constant verbatim
     assert f"<= {DOUBLE_EXACT_MAX} " in duck_det_double("x")
-    # Spark twin renders the same literal in its expression tree
-    assert str(DOUBLE_EXACT_MAX) in repr(det_double(F.col("x").cast("decimal(38,0)")))
+    assert f">= -{DOUBLE_EXACT_MAX}L AND " in spark_det_double("x")
+    assert f"<= {DOUBLE_EXACT_MAX}L " in spark_det_double("x")
 
 
 @PROP_SETTINGS

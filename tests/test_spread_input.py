@@ -60,6 +60,22 @@ def test_spread_noop_on_listing_failure(spark):
     assert "no-such-table" in llm._SPREAD_WARNED
 
 
+def test_spread_listing_failure_logs_once_per_table(spark, caplog):
+    """The listing fallback is logged on the catena_spark logger once
+    per table, however often the listing fails."""
+    import logging
+
+    df = tables.load(spark, SF_SMALL, "documents")
+    llm._SPREAD_WARNED.discard("no-such-table")
+    with caplog.at_level(logging.WARNING, logger="catena_spark"):
+        for _ in range(2):
+            assert llm._spread_input(df, "/no/such/dir", "no-such-table") is df
+    records = [r for r in caplog.records if r.name == "catena_spark"]
+    assert len(records) == 1
+    assert records[0].levelno == logging.WARNING
+    assert "'no-such-table'" in records[0].getMessage()
+
+
 def test_spread_noop_when_input_already_wide(spark, monkeypatch):
     """splits * 2 >= defaultParallelism -> no exchange inserted (the
     100 TB branch: thousands of splits feed the kernels directly)."""
