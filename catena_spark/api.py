@@ -15,11 +15,14 @@
 Design stance (SURVEY.md §3.2): the *DataFrame is the iterator*. catena's
 ``Next()`` walks one point at a time because its storage is a local mmap;
 at 100 TB a per-point cursor is the wrong contract, so ``iterator()``
-returns the time-ordered DataFrame of the series (predicate pushdown +
-partition pruning play the extent-index role) and ``seek`` is a filter,
-not a stateful cursor. Durability maps WAL→parquet commit: a batch is
-durable when its files land (object-store rename), replay-on-open is
-free because the files are the state.
+returns the time-ordered DataFrame of the series and ``seek`` is a
+filter, not a stateful cursor. The extent-index role is played by the
+Parquet scan: the series equality and ``ts`` filters push into it, and
+files sorted by (source, metric, ts) with INT64 ``ts`` statistics let it
+skip row groups. No read prunes dt windows: every read lists them all.
+Durability maps WAL→parquet commit: a batch is durable when its files
+land (object-store rename), replay-on-open is free because the files are
+the state.
 
 Value parity with catena's model: points are ``(source str, metric str,
 ts timestamp, value float64)`` — the exact Row shape [R point.go — H,
@@ -32,13 +35,15 @@ import re
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sources import ingest
 
 #: canonical point-row schema (catena Row).
 ROW_DDL = "source string, metric string, ts timestamp, value double"
+#: schema of the store: the rows plus their dt window
+_STORED_DDL = ROW_DDL + ", dt string"
 
 
 @dataclass
@@ -86,7 +91,8 @@ class SeriesIterator:
 class CatenaDB:
     """A catena DB over dt-partitioned parquet (SURVEY.md §1.2 mapping:
     partition dir = catena partition, parquet row groups sorted by
-    (source, metric, ts) = extents, partition pruning = extent index)."""
+    (source, metric, ts) = extents, their INT64 ts statistics = extent
+    index)."""
 
     def __init__(self, spark: SparkSession, base_dir: str, writable_partitions: int = 2):
         if writable_partitions < 1:
@@ -115,9 +121,11 @@ class CatenaDB:
     ) -> "CatenaDB":
         """``OpenDB``: recovery is free — committed parquet files ARE the
         state (no WAL replay step; the streaming checkpoint plays WAL
-        for the ingest path, tests/test_streaming.py)."""
+        for the ingest path, tests/test_streaming.py). The one repair is
+        a ``compact()`` that was cut short: its swap is rolled back."""
         if not Path(base_dir).exists():
             raise FileNotFoundError(base_dir)
+        ingest.recover_compaction(base_dir)
         return cls(spark, base_dir, writable_partitions)
 
     # ------------------------------------------------------------ write path
@@ -145,32 +153,43 @@ class CatenaDB:
         born-rotated window, so it is late (>=, not >, r5 fix — the old
         check accepted it and the re-insert was then rejected,
         non-idempotent). NULL-ts rows have no window: counted as
-        rejected_invalid, never written. The batch is persisted once so
-        the two counts and the write see one materialization."""
+        rejected_invalid, never written.
+
+        One pass: the write counts the batch through an ``Observation``,
+        so the input is evaluated once (a shuffle job and the write job)
+        and the counts describe the rows that were routed. The
+        observation sits on top of the dt shuffle, which carries every
+        row: AQE replaces a shuffle stage that wrote nothing by an empty
+        relation, and metrics observed inside it would be lost whenever
+        no row is writable. A batch with no writable row writes no data
+        file and no dt directory."""
         parts = self._partitions()
-        df = ingest.with_dt(rows.select("source", "metric", "ts", "value")).persist()
-        try:
-            n_invalid = df.where(F.col("dt").isNull()).count()
-            valid = df.where(F.col("dt").isNotNull())
-            if len(parts) >= self.writable_partitions:
-                horizon = parts[-self.writable_partitions]
-                ok = valid.where(F.col("dt") >= horizon)
-                n_late = valid.where(F.col("dt") < horizon).count()
-            else:
-                ok, n_late = valid, 0
-            n_ok = ok.count()
-            if n_ok:
-                (
-                    ok.repartition("dt")
-                    .sortWithinPartitions("source", "metric", "ts")
-                    .write.mode("append")
-                    .partitionBy("dt")
-                    .parquet(self.base_dir)
-                )
-        finally:
-            df.unpersist()
+        dt = F.col("dt")
+        if len(parts) >= self.writable_partitions:
+            late = dt < parts[-self.writable_partitions]
+        else:
+            late = F.lit(False)
+        obs = Observation()
+        (
+            ingest.with_dt(rows.select("source", "metric", "ts", "value"))
+            .repartition("dt")
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.count_if(dt.isNull()).alias("invalid"),
+                F.count_if(late).alias("late"),
+            )
+            .where(dt.isNotNull() & ~late)
+            .sortWithinPartitions("source", "metric", "ts")
+            .write.mode("append")
+            .partitionBy("dt")
+            .parquet(self.base_dir)
+        )
+        m = obs.get
         return InsertResult(
-            inserted=n_ok, rejected_late=n_late, rejected_invalid=n_invalid
+            inserted=m["n"] - m["invalid"] - m["late"],
+            rejected_late=m["late"],
+            rejected_invalid=m["invalid"],
         )
 
     # ------------------------------------------------------------ read path
@@ -178,14 +197,13 @@ class CatenaDB:
     def _all(self) -> DataFrame:
         # explicit schema makes reads total on a freshly created (empty)
         # DB — schema inference over zero files raises (r5, self-review)
-        return self.spark.read.schema(ROW_DDL + ", dt string").parquet(
-            self.base_dir
-        )
+        return self.spark.read.schema(_STORED_DDL).parquet(self.base_dir)
 
     def iterator(self, source: str, metric: str) -> SeriesIterator:
-        """``NewIterator``: equality filters push to the scan; partition
-        pruning (dt) + row-group stats (sorted by source, metric, ts)
-        are the extent index."""
+        """``NewIterator``: the series equality filters, and the ``ts``
+        filters of ``seek`` and range reads, push into the Parquet scan;
+        row-group statistics of files sorted by (source, metric, ts) are
+        the extent index. Every dt window is listed (no dt pruning)."""
         return SeriesIterator(
             self._all()
             .where((F.col("source") == source) & (F.col("metric") == metric))
@@ -197,22 +215,25 @@ class CatenaDB:
         return self._all().select("source", "metric").distinct()
 
     def latest(self, source: str, metric: str):
-        """Newest point of a series (B3) via max_by — partial-aggregate,
-        no global sort."""
-        r = (
+        """Newest point of a series (B3) as a ``Row(ts, value)``, or None.
+        A top-1 (one ``TakeOrderedAndProject`` job), with the order of
+        ``max_by(struct(ts, value), ...)``: a ``ts`` tie goes to the
+        higher value, NaN is the largest value, NULL the smallest."""
+        rows = (
             self.iterator(source, metric)
-            .df.agg(
-                F.max_by(F.struct("ts", "value"), F.struct("ts", "value")).alias("p")
-            )
-            .collect()[0]["p"]
+            .df.orderBy(F.col("ts").desc(), F.col("value").desc())
+            .select("ts", "value")
+            .limit(1)
+            .collect()
         )
-        return r
+        return rows[0] if rows else None
 
     # ------------------------------------------------------------ maintenance
 
     def compact(self, files_per_partition: int = 1) -> None:
-        """A5 compaction (sorted large files per window)."""
-        ingest.compact(self.spark, self.base_dir, files_per_partition)
+        """A5 compaction (sorted large files per window): only windows
+        with more than ``files_per_partition`` files are rewritten."""
+        ingest.compact(self.spark, self.base_dir, files_per_partition, schema=_STORED_DDL)
 
     def enforce_retention(self, max_partitions: int) -> list[str]:
         """A4 retention: drop oldest windows beyond ``max_partitions``."""

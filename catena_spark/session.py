@@ -47,6 +47,10 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.parquet.compression.codec": "zstd",
+    # INT64 µs timestamps, not Spark's default INT96: INT96 columns have
+    # no usable min/max statistics, so a ts filter could never skip a
+    # row group of a sorted file (the extent index, SURVEY.md §1.2)
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Spark 4.1 rejects INT64 TIMESTAMP(NANOS) parquet columns outright
     # (PARQUET_TYPE_ILLEGAL); read them as raw nanos and let tables.load

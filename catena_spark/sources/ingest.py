@@ -14,9 +14,13 @@ design obligation we carry from catena: it makes Parquet row-group
 min/max stats selective for per-series time-range scans — the same role
 as catena's extent index (SURVEY.md §4).
 
-Scale: dt-partitioned layout gives Catalyst partition pruning for time
-predicates; compaction bin-packs small streaming output files so scans
-at 100 TB see large, sorted row groups, not micro-batch confetti.
+Scale: the dt layout makes retention and compaction per-window
+directory operations. Reads filter on ``ts``, not on ``dt``, so they do
+not prune windows; what they skip is row groups, by the INT64 ``ts``
+statistics of sorted files (session.py writes TIMESTAMP_MICROS, since
+INT96 columns carry no usable statistics). Compaction bin-packs small
+streaming output files so scans at 100 TB see large, sorted row groups,
+not micro-batch confetti.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from .. import tables
 from ..registry import query
@@ -62,39 +67,116 @@ def write_partitioned(df: DataFrame, path: str, ts_col: str = "ts") -> None:
     )
 
 
-def compact(spark: SparkSession, path: str, target_files_per_partition: int = 1) -> None:
-    """A5 compaction: rewrite each dt partition into ``target_files_per_
-    partition`` large, sorted files (streaming sinks leave one file per
-    micro-batch). Idempotent; query results are invariant
+#: staging directory of a running ``compact``, inside the store: the
+#: leading "_" hides it from Spark's partition discovery and from the
+#: ``dt=*`` globs of retention and CatenaDB
+_COMPACT_DIR = "_compact"
+
+
+def _data_files(window: Path) -> list[Path]:
+    return [
+        f
+        for f in window.iterdir()
+        if f.name.endswith(".parquet") and not f.name.startswith((".", "_"))
+    ]
+
+
+def compact(
+    spark: SparkSession,
+    path: str,
+    target_files_per_partition: int = 1,
+    schema: str | StructType | None = None,
+) -> None:
+    """A5 compaction: rewrite each dt window that holds more than
+    ``target_files_per_partition`` parquet files into that many large,
+    sorted files (streaming sinks leave one file per micro-batch). Clean
+    windows are neither read nor written, so compacting a compacted
+    store starts no Spark job. Query results are invariant
     (tests/test_sources.py).
 
-    A bare ``repartition(N, "dt")`` hash-partitions on dt alone, so every
-    dt collapses into ONE task/file no matter what N says (ADVICE r1); a
-    per-row hash bucket in the key is what actually fans each dt out to N
-    files. At 100 TB this is also the skew fix: one hot day no longer
+    The dirty windows are read with ``schema`` when the caller knows
+    it, else with the ``tables`` schema cache. A bare
+    ``repartition(N, "dt")`` hash-partitions on dt alone, so every dt
+    collapses into ONE task/file no matter what N says (ADVICE r1); a
+    per-row hash bucket in the key is what actually fans each dt out to
+    N files. At 100 TB this is also the skew fix: one hot day no longer
     serializes through a single writer.
+
+    Swap, per window, after the rewrite of all dirty windows into
+    ``_compact/tmp`` has committed: rename live -> ``_compact/old``,
+    rename tmp -> live; then delete ``_compact``. A crash at any point
+    leaves every row in exactly one visible place once
+    ``recover_compaction`` has run (``CatenaDB.open`` and the next
+    ``compact`` run it). Between a window's two renames a concurrent
+    reader does not see that window.
+
+    A streaming file sink (``_spark_metadata``) is refused: its readers
+    list files from the sink log, which a rewrite cannot update. After
+    the sink's next batch the log lacks the earlier batches, and a read
+    of the sink fails (``_spark_metadata/0 doesn't exist``).
     """
-    df = spark.read.parquet(path)
-    cluster = [c for c in ("user_id", "event_type", "source", "metric") if c in df.columns]
+    root = Path(path)
+    if (root / "_spark_metadata").exists():
+        raise ValueError(
+            f"{path} is a streaming file sink (_spark_metadata): a rewrite "
+            "cannot update its sink log, which readers list files from"
+        )
+    recover_compaction(path)
     n = max(1, int(target_files_per_partition))
+    dirty = sorted(
+        p for p in root.glob("dt=*") if p.is_dir() and len(_data_files(p)) > n
+    )
+    if not dirty:
+        return
+    if schema is None:
+        schema = tables.parquet_schema(spark, path)
+    df = (
+        spark.read.schema(schema)
+        .option("basePath", path)
+        .parquet(*(str(p) for p in dirty))
+    )
+    cluster = [c for c in ("user_id", "event_type", "source", "metric") if c in df.columns]
     bucket = (F.abs(F.xxhash64(*cluster, "ts")) % n) if n > 1 else F.lit(0)
-    # partition count from the directory listing (metadata), not a
-    # cluster-wide distinct scan — at 100 TB that job existed only to
-    # learn a number the layout already encodes (self-review r5)
-    n_dt = max(1, len([p for p in Path(path).glob("dt=*") if p.is_dir()]))
-    tmp = path.rstrip("/") + ".compact-tmp"
+    stage = root / _COMPACT_DIR
+    tmp, old = stage / "tmp", stage / "old"
     (
         df.withColumn("_bucket", bucket)
-        .repartition(max(1, n_dt * n), "dt", "_bucket")
+        .repartition(len(dirty) * n, "dt", "_bucket")
         .drop("_bucket")
         .sortWithinPartitions(*cluster, "ts")
-        .write.mode("overwrite")
-        .partitionBy("dt")
-        .parquet(tmp)
+        .write.partitionBy("dt")
+        .parquet(str(tmp))
     )
-    # atomic-ish swap (single-node test path; object stores would rename)
-    shutil.rmtree(path)
-    Path(tmp).rename(path)
+    names = {p.name for p in dirty}
+    strays = sorted(p.name for p in tmp.iterdir() if p.is_dir() and p.name not in names)
+    if strays:
+        # a partition value that does not round-trip to its directory
+        # name: swapping would drop the window's rows
+        raise RuntimeError(f"compaction of {path} wrote unexpected windows {strays}")
+    old.mkdir()
+    for live in dirty:
+        new = tmp / live.name
+        new.mkdir(exist_ok=True)  # a window of empty files has no output
+        live.rename(old / live.name)
+        new.rename(live)
+    shutil.rmtree(stage)
+
+
+def recover_compaction(path: str) -> None:
+    """Undo what an interrupted ``compact`` left in ``path``: a window
+    it moved aside and did not replace goes back, then the staging
+    directory goes. A window already replaced keeps its compacted
+    files; the rewrite holds the same rows either way."""
+    stage = Path(path) / _COMPACT_DIR
+    if not stage.exists():
+        return
+    old = stage / "old"
+    if old.is_dir():
+        for moved in old.iterdir():
+            live = Path(path) / moved.name
+            if not live.exists():
+                moved.rename(live)
+    shutil.rmtree(stage)
 
 
 def partition_stats(spark: SparkSession, path: str) -> DataFrame:

@@ -6,6 +6,10 @@ invariance — exercised end-to-end on the Spark implementation."""
 from __future__ import annotations
 
 import datetime
+import itertools
+import os
+import pathlib
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -171,3 +175,246 @@ def test_env_int_tolerates_empty_and_names_bad_values(monkeypatch):
     monkeypatch.setenv("CATENA_X_TEST", "seven")
     with pytest.raises(ValueError, match="CATENA_X_TEST"):
         env_int("CATENA_X_TEST", 42)
+
+
+# ------------------------------------------------------- one-pass write path
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(result of fn(), Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"test-api-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _stored(db):
+    """Every stored (dt, ts, value), duplicates kept."""
+    return sorted(
+        (r["dt"], r["ts"], r["value"])
+        for r in db._all().select("dt", "ts", "value").collect()
+    )
+
+
+def _file_stats(root):
+    """{path: (inode, mtime_ns)} of every file under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.join(d, f)] = (st.st_ino, st.st_mtime_ns)
+    return out
+
+
+def _data_files(db):
+    return sorted(pathlib.Path(db.base_dir).glob("dt=*/*.parquet"))
+
+
+def test_insert_is_one_observed_pass(spark, db):
+    """One evaluation of the batch: a shuffle job and the write job, with
+    the late/invalid counts observed on the way (not 3 counts + persist)."""
+    db.insert_rows(_rows(spark, [0, 1, 2]))  # windows 10..12; writable: 11,12
+    null_ts = spark.createDataFrame(
+        [("cpu0", "util", None, 1.0)],
+        "source string, metric string, ts timestamp, value double",
+    )
+    res, jobs = _jobs(spark, lambda: db.insert_rows(_rows(spark, [0, 2, 3]).unionAll(null_ts)))
+    assert (res.inserted, res.rejected_late, res.rejected_invalid) == (6, 3, 1)
+    assert jobs == 2
+    counts = {d: n for d, n in db._all().groupBy("dt").count().collect()}
+    assert counts == {"2026-01-10": 3, "2026-01-11": 3, "2026-01-12": 6, "2026-01-13": 3}
+
+
+def test_insert_with_no_writable_row_writes_nothing(spark, db):
+    db.insert_rows(_rows(spark, [1, 2]))
+    before = _data_files(db)
+    res = db.insert_rows(_rows(spark, [0]))
+    assert (res.inserted, res.rejected_late, res.rejected_invalid) == (0, 3, 0)
+    assert _data_files(db) == before
+    assert db._partitions() == ["2026-01-11", "2026-01-12"]
+    empty = spark.createDataFrame([], "source string, metric string, ts timestamp, value double")
+    res = db.insert_rows(empty)
+    assert (res.inserted, res.rejected_late, res.rejected_invalid) == (0, 0, 0)
+
+
+def test_failed_insert_raises_promptly(spark, tmp_path):
+    """A write that fails raises out of insert_rows (no wait on the
+    observation) and writes nothing: the base dir is a regular file."""
+    base = tmp_path / "db"
+    base.write_text("not a directory")
+    db = CatenaDB(spark, str(base))
+    out = {}
+
+    def run():
+        try:
+            out["res"] = db.insert_rows(_rows(spark, [0, 1]))
+        except Exception as e:  # noqa: BLE001 - any failure is the point
+            out["err"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "insert_rows blocked after its write failed"
+    assert "err" in out and "res" not in out
+    assert base.read_text() == "not a directory"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["db"]
+
+
+def test_latest_is_one_job_with_max_by_order(spark, db):
+    """latest() is a top-1 with the order max_by(struct(ts, value))
+    had: a ts tie goes to the higher value, NaN is the largest value,
+    NULL loses to a non-null value; a missing series is None."""
+    t0 = datetime.datetime(2026, 1, 10, 12, 0, 0)
+    t1 = t0 + datetime.timedelta(minutes=1)
+    nan = float("nan")
+    data = [
+        ("tie", "m", t0, 9.0), ("tie", "m", t1, 1.0), ("tie", "m", t1, 2.0),
+        ("nan", "m", t1, 5.0), ("nan", "m", t1, nan), ("nan", "m", t0, 7.0),
+        ("null", "m", t1, None), ("null", "m", t1, 3.0),
+        ("onlynull", "m", t0, 4.0), ("onlynull", "m", t1, None),
+    ]
+    db.insert_rows(
+        spark.createDataFrame(data, "source string, metric string, ts timestamp, value double")
+    )
+    for src in ("tie", "nan", "null", "onlynull"):
+        want = (
+            db.iterator(src, "m")
+            .df.agg(F.max_by(F.struct("ts", "value"), F.struct("ts", "value")).alias("p"))
+            .collect()[0]["p"]
+        )
+        got, jobs = _jobs(spark, lambda: db.latest(src, "m"))
+        assert jobs == 1
+        assert got["ts"] == want["ts"] == t1
+        assert repr(got["value"]) == repr(want["value"])
+    assert db.latest("tie", "m")["value"] == 2.0
+    assert repr(db.latest("nan", "m")["value"]) == "nan"
+    assert db.latest("null", "m")["value"] == 3.0
+    assert db.latest("onlynull", "m")["value"] is None
+    assert db.latest("missing", "m") is None
+
+
+# ------------------------------------------------------- INT64 timestamps
+
+
+def _ts_columns(db):
+    """(physical type, logical type) of ts in every stored data file."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in _data_files(db):
+        col = pq.ParquetFile(f).schema.column(2)
+        assert col.name == "ts"
+        out.append((col.physical_type, str(col.logical_type)))
+    return out
+
+
+def test_insert_writes_ts_as_int64_micros(spark, db):
+    db.insert_rows(_rows(spark, [0]))
+    cols = _ts_columns(db)
+    assert cols and all(
+        phys == "INT64" and "timeUnit=microseconds" in logical for phys, logical in cols
+    ), cols
+
+
+def test_window_mixing_int96_and_int64_reads_back_exactly(spark, db):
+    """A window written before the store switched to INT64 (INT96 files)
+    and after it reads back exactly, before and after compaction."""
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        db.insert_rows(_rows(spark, [0]))
+    finally:
+        spark.conf.set(key, prev)
+    shifted = _rows(spark, [0]).withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 SECONDS"))
+    db.insert_rows(shifted)
+    assert sorted(phys for phys, _ in _ts_columns(db)) == ["INT64", "INT96"]
+    want = sorted(
+        (r["ts"], r["value"])
+        for df in (_rows(spark, [0]), shifted)
+        for r in df.collect()
+    )
+    got = sorted((r["ts"], r["value"]) for r in db.iterator("cpu0", "util").points().collect())
+    assert got == want
+    db.compact()
+    assert [phys for phys, _ in _ts_columns(db)] == ["INT64"]
+    got = sorted((r["ts"], r["value"]) for r in db.iterator("cpu0", "util").points().collect())
+    assert got == want
+
+
+# ------------------------------------------------------- compaction
+
+
+def test_compact_rewrites_only_dirty_windows(spark, db):
+    db.insert_rows(_rows(spark, [0, 1]))
+    db.compact()  # both windows: one file each
+    db.insert_rows(_rows(spark, [1]))  # window 11 is dirty again
+    clean = pathlib.Path(db.base_dir, "dt=2026-01-10")
+    clean_stats = _file_stats(clean)
+    before = _stored(db)
+    db.compact()
+    assert _file_stats(clean) == clean_stats
+    assert len(list(pathlib.Path(db.base_dir, "dt=2026-01-11").glob("*.parquet"))) == 1
+    assert _stored(db) == before
+    assert not pathlib.Path(db.base_dir, "_compact").exists()
+
+
+def test_compacting_a_clean_store_touches_nothing(spark, db):
+    db.insert_rows(_rows(spark, [0, 1]))
+    db.compact()
+    stats = _file_stats(db.base_dir)
+    _, jobs = _jobs(spark, db.compact)
+    assert jobs == 0
+    assert _file_stats(db.base_dir) == stats
+
+
+@pytest.mark.parametrize("crash_at", ["rename0", "rename1", "rename2", "rename3", "rmtree"])
+def test_compact_cut_short_recovers_on_open(spark, db, monkeypatch, crash_at):
+    """Cut compact() after each step of its swap (write tmp, live->old,
+    tmp->live for each of two windows, delete the staging dir): open()
+    then restores a store in which every row is visible exactly once,
+    and a later compact() completes."""
+    from catena_spark.sources import ingest
+
+    db.insert_rows(_rows(spark, [0, 1]))
+    db.insert_rows(_rows(spark, [0, 1]))  # two files in each window
+    before = _stored(db)
+
+    class Cut(Exception):
+        pass
+
+    with monkeypatch.context() as m:
+        if crash_at == "rmtree":
+            def rmtree(path, *a, **k):
+                raise Cut(path)
+
+            m.setattr(ingest.shutil, "rmtree", rmtree)
+        else:
+            budget = [int(crash_at[-1])]
+            real = pathlib.Path.rename
+
+            def rename(self, target):
+                if budget[0] == 0:
+                    raise Cut(self)
+                budget[0] -= 1
+                return real(self, target)
+
+            m.setattr(pathlib.Path, "rename", rename)
+        with pytest.raises(Cut):
+            db.compact()
+    assert pathlib.Path(db.base_dir, "_compact").exists()
+    db2 = CatenaDB.open(spark, db.base_dir)
+    assert not pathlib.Path(db.base_dir, "_compact").exists()
+    assert db2._partitions() == ["2026-01-10", "2026-01-11"]
+    assert _stored(db2) == before
+    db2.compact()
+    assert _stored(db2) == before
+    assert [len(list(p.glob("*.parquet"))) for p in sorted(pathlib.Path(db.base_dir).glob("dt=*"))] == [1, 1]

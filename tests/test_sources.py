@@ -54,6 +54,31 @@ def test_compaction_reduces_files_keeps_results(spark, tmp_path):
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
 
 
+def test_compact_refuses_streaming_sink(spark, tmp_path):
+    """A streaming file sink lists its files in _spark_metadata; a
+    rewrite cannot update that log, and once the sink commits its next
+    batch a read of it fails. compact fails loud instead."""
+    import datetime
+
+    from catena_spark.sources.ingest import EVENTS_DDL, stream_ingest_events
+
+    src, dest = tmp_path / "src", tmp_path / "sink"
+    t0 = datetime.datetime(2024, 1, 5, 12)
+    for i in range(2):
+        rows = [(10 * i + j, t0, j, "click", 1.0, "") for j in range(3)]
+        spark.createDataFrame(rows, EVENTS_DDL).coalesce(1).write.parquet(str(src / f"b{i}"))
+    for i in range(2):  # two input files, two micro-batches
+        (src / f"b{i}").rename(tmp_path / f"b{i}")
+        part = next((tmp_path / f"b{i}").glob("*.parquet"))
+        part.rename(src / f"part-{i}.parquet")
+    q = stream_ingest_events(spark, str(src), str(dest), str(tmp_path / "ckpt"), 1)
+    q.awaitTermination()
+    assert len(glob.glob(f"{dest}/dt=*/*.parquet")) == 2
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        compact(spark, str(dest))
+    assert len(glob.glob(f"{dest}/dt=*/*.parquet")) == 2
+
+
 def test_retention_drops_oldest(spark, tmp_path):
     path = str(tmp_path / "store")
     write_partitioned(_events(spark), path)
