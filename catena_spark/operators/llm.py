@@ -114,7 +114,7 @@ def _docs_norm(
 
     ``spread=False`` opts a consumer out of the r17 unsplittable-input
     fan-out (VERDICT r17 item 1): an r18 interleaved same-session A/B
-    (scripts/r18_ab_spread.py) showed the extra round-robin exchange
+    (the A/B script added in da7af74) showed the extra round-robin exchange
     COSTS more than the parallelism buys when the per-row kernel is
     trivial — llm_exact_dedup 0.19 s OFF vs 0.48 s ON, llm_bm25_topk
     0.68 vs 1.17, llm_dedup_remap 0.35 vs 0.64, llm_inverted_index

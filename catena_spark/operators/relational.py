@@ -1970,8 +1970,8 @@ def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lost its local A/B 0.78x precisely because the join output's
     # inflated estimate forced a sort-merge fact join; see
     # OPTIMIZATION_r18.md). Plan evidence under auto-broadcast OFF:
-    # plans/r18/join_q8_market_share_noautobc_{old,new}.txt — the fact
-    # stream crosses 2 exchanges instead of 3.
+    # `git show cc731cb:plans/r18/join_q8_market_share_noautobc_old.txt`
+    # (and `_new.txt`) — the fact stream crosses 2 exchanges instead of 3.
     c_asia = (
         c.join(F.broadcast(cn), c.c_nationkey == F.col("cn_key"))
         .join(F.broadcast(r), F.col("cn_region") == r.r_regionkey)

@@ -5,11 +5,15 @@ Each operator family registers its driver-checked queries here with a
 dicts. A spec without ``oracle`` SQL is a rows-only check (the driver's
 weaker gate for non-SQL-expressible ops, __spark_entry__.py:35-36).
 
-SURVEY.md §2's *key* column is the registry key namespace.
+SURVEY.md §2's *key* column is the registry key namespace. ``specs()``
+orders the registry as an LRU over past driver records
+(``CORRECTNESS_r*.json``), so the driver's 50-key window always takes
+the keys whose latest green record is oldest.
 """
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -27,6 +31,12 @@ class QuerySpec:
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
+
+_LOG = logging.getLogger("catena_spark")
+
+#: round files already reported unreadable this process: specs() runs
+#: several times per driver run, and each bad file is logged once.
+_HISTORY_WARNED: set[str] = set()
 
 
 def query(name: str, section: str, oracle: str | None = None):
@@ -83,7 +93,17 @@ def _scan_history(
         try:
             with open(path) as f:
                 report = json.load(f)
-        except Exception:
+            if not isinstance(report, dict):
+                raise ValueError("not a JSON object")
+        except (OSError, ValueError) as e:
+            if path not in _HISTORY_WARNED:
+                _HISTORY_WARNED.add(path)
+                _LOG.warning(
+                    "skipping unreadable driver record %s (%s); the "
+                    "rotation order ignores it",
+                    path,
+                    e,
+                )
             continue
         for key, res in report.items():
             spec = _REGISTRY.get(key)
@@ -120,267 +140,26 @@ def _nongreen_keys(root: str | None = None) -> set[str]:
     return _scan_history(root)[1]
 
 
-# --------------------------------------------------------------------
-# Runtime-change recency (VERDICT r11 item 2): a key whose
-# IMPLEMENTATION changed after its latest green driver record must
-# front the next rotation window, regardless of how many old records it
-# has — otherwise a rewrite verified only by builder probes waits
-# several rounds for a driver re-record (the r11 grouped_positions
-# rewrite left win_ntile_dense/win_percent_rank_cume with pre-rewrite
-# records until r13 under age-only ordering).
-#
-# "Implementation" = the key's function plus every catena_spark
-# FUNCTION reachable from it (Name/Attribute references resolved
-# through module globals, recursively) — so a shared-helper edit
-# (twophase.py) boosts its callers (token packing, pagerank, ntile,
-# percent_rank) even though their own bodies are untouched. Sources are
-# AST-normalized (ast.unparse: comment-insensitive, docstring- and
-# code-sensitive) and compared against the same functions extracted
-# from each file's blob at the commit that ADDED the key's latest
-# CORRECTNESS record (the driver commits records on the verified final
-# tree, so that blob is the verified implementation). Granularity is
-# module-level functions: a module-CONSTANT edit is not detected —
-# acceptable, constants that matter are read inside some fingerprinted
-# function. Reference RESOLUTION is likewise depth-limited by design
-# (ADVICE r12): only bare Names and single-level module.attr chains
-# resolve (``twophase.global_running_sum`` yes; a multi-level
-# ``catena_spark.twophase.fn`` chain, a bound method, or a closure is
-# INVISIBLE to the fingerprint and its edits never trigger the boost) —
-# keep helper call sites in the visible style (import the module, call
-# ``module.fn``), which is already the house import convention. Any
-# git/parse failure degrades to "unchanged" so the rotation never
-# breaks where git is unavailable.
-
-
-def _fn_index(src: str) -> dict[str, str]:
-    """{module-level function name: ast-normalized source} for a file."""
-    import ast
-
-    return {
-        n.name: ast.unparse(n)
-        for n in ast.parse(src).body
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-    }
-
-
-#: Working-tree parse cache shared across all 166 keys' fingerprints
-#: (mtime-validated): {abspath: (mtime, {name: unparsed}, {name: node})}.
-_FP_PARSE_CACHE: dict[str, tuple[float, dict[str, str], dict[str, object]]] = {}
-
-
-def _parsed_file(path: str) -> tuple[dict[str, str], dict[str, object]]:
-    import ast
-    import os
-
-    mtime = os.path.getmtime(path)
-    hit = _FP_PARSE_CACHE.get(path)
-    if hit is not None and hit[0] == mtime:
-        return hit[1], hit[2]
-    with open(path, encoding="utf-8") as fh:
-        src = fh.read()
-    nodes = {
-        n.name: n
-        for n in ast.parse(src).body
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-    }
-    srcs = {name: ast.unparse(n) for name, n in nodes.items()}
-    _FP_PARSE_CACHE[path] = (mtime, srcs, nodes)
-    return srcs, nodes
-
-
-def _impl_fingerprint(fn) -> dict[tuple[str, str], str]:
-    """{(repo-relative path, function name): normalized source} for
-    ``fn`` and every catena_spark function transitively reachable from
-    it via Name / module.attr references."""
-    import ast
-    import inspect
-    import os
-    import types
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out: dict[tuple[str, str], str] = {}
-    seen: set[tuple[str, str]] = set()
-
-    def visit(f) -> None:
-        mod = inspect.getmodule(f)
-        if mod is None or not getattr(mod, "__name__", "").startswith(
-            "catena_spark"
-        ):
-            return
-        path = os.path.abspath(mod.__file__)
-        rel = os.path.relpath(path, root)
-        key = (rel, f.__name__)
-        if key in seen:
-            return
-        seen.add(key)
-        srcs, nodes = _parsed_file(path)
-        node = nodes.get(f.__name__)
-        if node is None:  # not module-level (closure/lambda): skip
-            return
-        out[key] = srcs[f.__name__]
-        for sub in ast.walk(node):
-            tgt = None
-            if isinstance(sub, ast.Name):
-                tgt = mod.__dict__.get(sub.id)
-            elif isinstance(sub, ast.Attribute) and isinstance(
-                sub.value, ast.Name
-            ):
-                base = mod.__dict__.get(sub.value.id)
-                if isinstance(base, types.ModuleType) and getattr(
-                    base, "__name__", ""
-                ).startswith("catena_spark"):
-                    tgt = getattr(base, sub.attr, None)
-            if isinstance(tgt, types.FunctionType) and getattr(
-                tgt, "__module__", ""
-            ).startswith("catena_spark"):
-                visit(tgt)
-
-    visit(fn)
-    return out
-
-
-def _git(root: str, *args: str) -> str | None:
-    import subprocess
-
-    try:
-        p = subprocess.run(
-            ["git", "-C", root, *args],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-    except Exception:
-        return None
-    return p.stdout if p.returncode == 0 else None
-
-
-def _changed_since_record(root: str | None = None) -> dict[str, str]:
-    """{key: "direct" | "transitive"} for keys whose implementation
-    fingerprint differs from the blob at the commit that added their
-    latest green CORRECTNESS record.
-
-    "direct" = the key's OWN registered function body changed;
-    "transitive" = only a reachable helper changed. The distinction is
-    the VERDICT r16 item 2 sub-tier: a shared-helper edit (tables.load,
-    encodings) can flag 60+ keys at once, and with >50 changed keys
-    competing for the 50-slot window, a settled-count-only tiebreak can
-    push out exactly the keys carrying the round's real semantic edits
-    (r16: llm_centroid_by_label / llm_kmeans_assign missed the window
-    behind 65 transitively-flagged keys). Direct changes must never
-    wait rounds for a driver re-record (VERDICT r11 item 2), so they
-    outrank every transitively-flagged key regardless of settled count.
-
-    The own-function entry is always the FIRST key of the fingerprint
-    dict (_impl_fingerprint records ``fn`` before recursing into its
-    callees), so direct detection needs no extra git work.
-    """
-    import os
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _load_all()  # fingerprints need the populated registry
-    try:
-        latest = _scan_history(root)[2]
-    except Exception:
-        return {}
-    commit_cache: dict[int, str | None] = {}
-    old_index_cache: dict[tuple[str, str], dict[str, str] | None] = {}
-    changed: dict[str, str] = {}
-    for key, spec in _REGISTRY.items():
-        rnd = latest.get(key)
-        if rnd is None:
-            continue  # never recorded: age-ordering already fronts it
-        if rnd not in commit_cache:
-            sha = _git(
-                root,
-                "log",
-                "--format=%H",
-                "--diff-filter=A",
-                "-n",
-                "1",
-                "--",
-                f"CORRECTNESS_r{rnd:02d}.json",
-            )
-            commit_cache[rnd] = sha.strip() if sha else None
-        sha = commit_cache[rnd]
-        if sha is None:
-            continue
-        try:
-            cur = _impl_fingerprint(spec.fn)
-        except Exception:
-            continue
-        own_key = next(iter(cur), None)
-        for (rel, name), src in cur.items():
-            ck = (sha, rel)
-            if ck not in old_index_cache:
-                blob = _git(root, "show", f"{sha}:{rel}")
-                try:
-                    old_index_cache[ck] = (
-                        _fn_index(blob) if blob is not None else None
-                    )
-                except SyntaxError:
-                    old_index_cache[ck] = None
-            idx = old_index_cache[ck]
-            # a file that did not exist (or parse) at the record commit
-            # means the implementation moved/was created since: changed
-            if idx is None or idx.get(name) != src:
-                changed[key] = (
-                    "direct" if (rel, name) == own_key else "transitive"
-                )
-                break
-    return changed
-
-
-_CHANGED_CACHE: dict[str, str] | None = None
-
-#: Rotation tier per change kind (specs() sort key, VERDICT r16 item 2):
-#: direct edits front the window unconditionally, transitive flags beat
-#: unchanged keys but yield to direct ones.
-_CHANGE_TIER = {"direct": 0, "transitive": 1}
-
-
-def _changed_keys() -> dict[str, str]:
-    """Process-cached _changed_since_record (specs() is called several
-    times per driver run; the git scan is ~1s and cannot change
-    mid-process — the working tree and record commits are fixed)."""
-    global _CHANGED_CACHE
-    if _CHANGED_CACHE is None:
-        _CHANGED_CACHE = _changed_since_record()
-    return _CHANGED_CACHE
-
-
 def specs() -> dict[str, QuerySpec]:
     """Registry in driver-rotation order (the driver checks a 50-key
     PREFIX). Sort key, most significant first:
 
-    1. change tier — direct edits, then transitive flags, then
-       unchanged (VERDICT r16 item 2);
-    2. latest green record round, ascending — oldest-record-first
-       makes the rotation a true LRU (VERDICT r16 item 3): with 166
-       keys and a 50-key window, a key just re-recorded waits behind at
-       most 116 older keys = ceil(116/50) = 3 rounds, so steady-state
-       staleness is bounded at 3 rounds REGARDLESS of how many keys a
-       shared-helper edit flags (never-recorded keys sort as round 0
-       and front everything in their tier);
-    3. settled count ascending (least-verified tiebreak);
-    4. non-green history first (VERDICT r4 item 5: flaky keys get
-       their confirming re-check soonest);
-    5. registration order (stable).
+    1. latest green record round, ascending — oldest-record-first
+       makes the rotation an LRU: with 166 keys and a 50-key window, a
+       key just re-recorded waits behind at most 116 older keys, so
+       staleness is bounded at ceil(116/50) = 3 rounds (never-recorded
+       keys sort as round 0 and front everything);
+    2. settled count ascending (least-verified tiebreak);
+    3. non-green history first (flaky keys get their confirming
+       re-check soonest);
+    4. registration order (stable).
     """
     _load_all()
-    try:
-        settled, shaky, latest = _scan_history()
-    except Exception:
-        settled, shaky, latest = {}, set(), {}
-    try:
-        changed = _changed_keys()
-    except Exception:
-        changed = {}
+    settled, shaky, latest = _scan_history()
     order = {k: i for i, k in enumerate(_REGISTRY)}
     keys = sorted(
         _REGISTRY,
         key=lambda k: (
-            _CHANGE_TIER.get(changed.get(k), 2),
             latest.get(k, 0),
             settled.get(k, 0),
             0 if k in shaky else 1,

@@ -10,6 +10,7 @@ masquerading as Delta.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,10 +23,13 @@ ICEBERG_PKG = "org.apache.iceberg:iceberg-spark-runtime-3.5_2.13:<iceberg-versio
 
 
 def _has_jvm_class(spark: SparkSession, cls: str) -> bool:
+    """Whether ``cls`` is on the driver classpath. Only the JVM's own
+    ClassNotFoundException means "not installed"; any other failure
+    (a dead gateway, say) propagates."""
     try:
         spark._jvm.java.lang.Class.forName(cls)  # type: ignore[union-attr]
         return True
-    except Exception:
+    except Py4JJavaError:
         return False
 
 

@@ -32,10 +32,12 @@ the Spark default behavior this module never makes worse).
 
 from __future__ import annotations
 
+import logging
 import os
-import warnings
 
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger("catena_spark")
 
 #: The conf that routes scans off the vectorized reader (the mitigation).
 VECTORIZED_READER_CONF = "spark.sql.parquet.enableVectorizedReader"
@@ -153,22 +155,20 @@ def mitigate_byte_stream_split(
     hits, truncated = _bss_scan(path, max_files)
     if not hits:
         if truncated:
-            warnings.warn(
+            _LOG.warning(
                 f"BSS sample bound reached: {max_files} footers scanned "
                 f"under {path} with no BYTE_STREAM_SPLIT hits, but more "
                 "files exist — unsampled files may still carry BSS (the "
                 "data scan would then fail loud with 'Unsupported "
                 "encoding'); pass max_files=None to scan every footer.",
-                stacklevel=2,
             )
         return False
     sample = next(iter(hits.items()))
-    warnings.warn(
+    _LOG.warning(
         f"{len(hits)} parquet file(s) under {path} carry "
         f"BYTE_STREAM_SPLIT chunks (e.g. {os.path.basename(sample[0])}: "
         f"{sample[1]}); {MITIGATION}. Pinning "
         f"{VECTORIZED_READER_CONF}=false on this session.",
-        stacklevel=2,
     )
     spark.conf.set(VECTORIZED_READER_CONF, "false")
     return True
@@ -489,13 +489,12 @@ def _merged_footer_info(path: str, max_files: int | None = None):
         raise FileNotFoundError(f"no parquet files under {path}")
     if max_files is not None and len(files) > max_files:
         files = files[:max_files]
-        warnings.warn(
+        _LOG.warning(
             f"schema-drift footer sample truncated at max_files="
             f"{max_files} under {path}: columns or wider types present "
             "only in unsampled files will be MISSING from the derived "
             "superset schema (silently, to this helper). Pass "
             "max_files=None to scan every footer — metadata-only.",
-            stacklevel=3,
         )
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -618,13 +617,12 @@ def _merged_footer_info(path: str, max_files: int | None = None):
                 ]:
                     int96.add(canonical + p[len(alias):])
                 names.remove(alias)
-            warnings.warn(
+            _LOG.warning(
                 f"rename drift healed by parquet field id {i}: "
                 f"{sorted(ns)} are one column; reading as "
                 f"{canonical!r} (majority-of-files name) via Spark "
                 "field-id resolution. If the lake's current name is a "
                 "different alias, rename the result",
-                stacklevel=3,
             )
         # uniform stamping was just proven (no None anywhere), so the
         # map covers every surviving column

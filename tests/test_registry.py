@@ -1,11 +1,14 @@
-"""The driver-window rotation contract (registry._settled_counts /
-specs ordering) is load-bearing: the driver checks a 50-key PREFIX of
-queries() order, so a bug here silently stops unverified keys from ever
-reaching the gate. Locked in against synthetic CORRECTNESS files."""
+"""The driver-window rotation contract is load-bearing: the driver
+checks a 50-key PREFIX of queries() order, and specs() orders it as an
+LRU over past CORRECTNESS records (oldest latest green round first), so
+a bug here silently stops unverified keys from ever reaching the gate.
+Locked in against synthetic CORRECTNESS files and the repo's history."""
 
 from __future__ import annotations
 
 import json
+import logging
+import subprocess
 
 from catena_spark import registry
 
@@ -81,7 +84,6 @@ def test_nongreen_history_breaks_ties_first():
     confirming re-check lands in the next 50-key window."""
     registry._load_all()
     counts, shaky, latest = registry._scan_history()
-    changed = registry._changed_keys()  # r12: recency boost outranks
     keys = list(registry.specs())
     for k in shaky:
         if k not in keys:  # history outlives renamed/removed keys
@@ -91,8 +93,6 @@ def test_nongreen_history_breaks_ties_first():
             same_tier = (
                 counts.get(other, 0) == counts.get(k, 0)
                 and latest.get(other, 0) == latest.get(k, 0)
-                and registry._CHANGE_TIER.get(changed.get(other), 2)
-                == registry._CHANGE_TIER.get(changed.get(k), 2)
             )
             if same_tier and other not in shaky and j < ki:
                 raise AssertionError(
@@ -118,54 +118,12 @@ def test_nongreen_keys_detects_err_and_mismatch(tmp_path):
     assert err in bad and mism in bad and green not in bad
 
 
-def test_fn_index_is_comment_insensitive():
-    """The fingerprint must ignore comments/formatting (they can't
-    change runtime behavior) but see code and docstring edits."""
-    a = registry._fn_index("def f(x):\n    # a comment\n    return x + 1\n")
-    b = registry._fn_index("def f(x):\n    return x + 1  # moved\n")
-    c = registry._fn_index("def f(x):\n    return x + 2\n")
-    assert a["f"] == b["f"]
-    assert a["f"] != c["f"]
-
-
-def test_impl_fingerprint_follows_shared_helpers():
-    """VERDICT r11 item 2's core requirement: a key implemented in one
-    module but calling a shared helper in another (win_ntile_dense ->
-    twophase.grouped_positions) must carry the helper in its
-    fingerprint, so a helper edit boosts its callers."""
+def test_rotation_is_lru_within_tier():
+    """The OLDEST latest green record fronts, so the 50-window always
+    takes the 50 stalest keys and staleness is bounded at
+    ceil((166-50)/50) = 3 rounds. Pinned live: no key outside the
+    window may be staler than any key inside it."""
     registry._load_all()
-    fp = registry._impl_fingerprint(registry._REGISTRY["win_ntile_dense"].fn)
-    names = {(rel.replace("\\", "/"), n) for rel, n in fp}
-    assert ("catena_spark/operators/relational.py", "win_ntile_dense") in names
-    assert ("catena_spark/twophase.py", "grouped_positions") in names
-    assert ("catena_spark/twophase.py", "resolve_partitions") in names
-    # and the runtime-conf path every key passes through
-    assert ("catena_spark/tables.py", "load") in names
-
-
-def test_changed_keys_front_the_window(monkeypatch):
-    """A key flagged changed-since-record must lead specs() ordering
-    even with the maximum settled count (the boost is the FIRST sort
-    component — record age alone must not delay re-verification of a
-    rewritten implementation)."""
-    registry._load_all()
-    counts = registry._settled_counts()
-    most_settled = max(counts, key=lambda k: counts[k])
-    monkeypatch.setattr(
-        registry, "_changed_keys", lambda: {most_settled: "direct"}
-    )
-    assert registry.next_window(1) == [most_settled]
-
-
-def test_rotation_is_lru_within_tier(monkeypatch):
-    """VERDICT r16 item 3: within a change tier the OLDEST latest green
-    record fronts, so the 50-window always takes the 50 stalest keys
-    and steady-state staleness is bounded at ceil((166-50)/50) = 3
-    rounds no matter how many keys a shared-helper edit flags. Pinned
-    live: with the change boost neutralized, no key outside the window
-    may be staler than any key inside it."""
-    registry._load_all()
-    monkeypatch.setattr(registry, "_changed_keys", lambda: {})
     latest = registry._scan_history()[2]
     win = registry.next_window(50)
     worst_in = max(latest.get(k, 0) for k in win)
@@ -178,184 +136,52 @@ def test_rotation_is_lru_within_tier(monkeypatch):
     )
 
 
-def test_direct_change_outranks_transitive(monkeypatch):
-    """VERDICT r16 item 2: within the changed tier, a key whose OWN
-    function body changed must outrank a transitively-flagged key even
-    when the transitive key has the LOWER settled count (in r16 the
-    settled-count tiebreak pushed the round's only two directly-edited
-    keys out of a 67-keys-for-50-slots window). Uses the real settled
-    counts: direct = max-settled key, transitive = min-settled key."""
+def test_specs_order_is_the_lru_sort_key():
+    """specs() is exactly the sort by (latest green round, settled
+    count, non-green first, registration order) on the repo's history."""
     registry._load_all()
-    counts = registry._settled_counts()
-    greenest = max(counts, key=lambda k: counts[k])
-    least = min(registry._REGISTRY, key=lambda k: counts.get(k, 0))
-    assert counts.get(least, 0) < counts[greenest]
-    monkeypatch.setattr(
-        registry,
-        "_changed_keys",
-        lambda: {greenest: "direct", least: "transitive"},
+    settled, shaky, latest = registry._scan_history()
+    order = list(registry._REGISTRY)
+    expect = sorted(
+        order,
+        key=lambda k: (
+            latest.get(k, 0),
+            settled.get(k, 0),
+            0 if k in shaky else 1,
+            order.index(k),
+        ),
     )
-    window = list(registry.specs())
-    assert window.index(greenest) < window.index(least), (
-        "a directly-edited key must front every transitively-flagged "
-        "key regardless of settled count"
-    )
-    # and both still precede the entire unchanged population
-    assert window.index(least) < min(
-        window.index(k)
-        for k in registry._REGISTRY
-        if k not in (greenest, least)
-    )
+    assert list(registry.specs()) == expect
 
 
-def test_changed_since_record_is_subset_and_survives_no_git(monkeypatch):
-    """Live smoke on the real repo: the changed set must be registry
-    keys only; and a git failure must degrade to 'no boost', never an
-    exception (the driver imports queries() in environments we don't
-    control)."""
+def test_specs_starts_no_subprocess(monkeypatch):
+    """Ordering the driver surface reads round files only: no git or
+    other child process, whatever the checkout."""
+    calls = []
+    real_run = subprocess.run
+
+    def counting_run(*args, **kwargs):
+        calls.append(args)
+        return real_run(*args, **kwargs)
+
+    monkeypatch.setattr(subprocess, "run", counting_run)
+    registry.specs()
+    registry.queries()
+    registry.oracles()
+    assert calls == []
+
+
+def test_unreadable_round_file_is_logged_once_and_skipped(tmp_path, caplog):
     registry._load_all()
-    changed = registry._changed_since_record()
-    assert set(changed) <= set(registry._REGISTRY)
-    assert set(changed.values()) <= {"direct", "transitive"}
-    monkeypatch.setattr(registry, "_git", lambda *a: None)
-    assert registry._changed_since_record() == {}
-
-
-def test_changed_since_record_end_to_end(monkeypatch):
-    """Mechanism pin without real-git coupling: when every record-commit
-    blob equals the working tree, NOTHING is boosted; when the blob for
-    twophase.py lacks grouped_positions (as if the helper didn't exist
-    at record time), exactly the keys whose closure reaches it are
-    boosted. This survives future rounds (no dependence on which keys
-    happen to be stale in the live repo)."""
-    import ast
-    import os
-
-    registry._load_all()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(registry.__file__)))
-
-    def git_identity(rootarg, *args):
-        if args[0] == "log":
-            return "fakesha\n"
-        if args[0] == "show":
-            rel = args[1].split(":", 1)[1]
-            try:
-                with open(os.path.join(rootarg, rel), encoding="utf-8") as f:
-                    return f.read()
-            except OSError:
-                return None
-        return None
-
-    monkeypatch.setattr(registry, "_git", git_identity)
-    assert registry._changed_since_record() == {}
-
-    def git_without_grouped_positions(rootarg, *args):
-        out = git_identity(rootarg, *args)
-        if (
-            out is not None
-            and args[0] == "show"
-            and args[1].endswith("catena_spark/twophase.py")
-        ):
-            tree = ast.parse(out)
-            tree.body = [
-                n
-                for n in tree.body
-                if not (
-                    isinstance(n, ast.FunctionDef)
-                    and n.name == "grouped_positions"
-                )
-            ]
-            return ast.unparse(tree)
-        return out
-
-    monkeypatch.setattr(registry, "_git", git_without_grouped_positions)
-    changed = registry._changed_since_record()
-    # the helper (not the keys' own bodies) differs => transitive kind
-    assert changed.get("win_ntile_dense") == "transitive"
-    assert changed.get("win_percent_rank_cume") == "transitive"
-    # a key that never touches twophase must NOT be boosted
-    assert "ts_range_scan" not in changed
-    # callers of the OTHER helper in the same file must not be boosted
-    # by a diff scoped to grouped_positions alone
-    assert "llm_token_packing" not in changed
-
-    # and when the key's OWN body differs, the kind is "direct" —
-    # even though its transitive closure (twophase helpers) also
-    # reaches edited code in other scenarios
-    def git_without_own_fn(rootarg, *args):
-        out = git_identity(rootarg, *args)
-        if (
-            out is not None
-            and args[0] == "show"
-            and args[1].endswith("catena_spark/operators/relational.py")
-        ):
-            tree = ast.parse(out)
-            tree.body = [
-                n
-                for n in tree.body
-                if not (
-                    isinstance(n, ast.FunctionDef)
-                    and n.name == "win_ntile_dense"
-                )
-            ]
-            return ast.unparse(tree)
-        return out
-
-    monkeypatch.setattr(registry, "_git", git_without_own_fn)
-    changed = registry._changed_since_record()
-    assert changed.get("win_ntile_dense") == "direct"
-    assert "win_percent_rank_cume" not in changed
-
-
-def test_every_round_record_has_a_resolvable_adding_commit():
-    """VERDICT r12 item 1: the recency boost anchors a key's verified
-    implementation to the blob at the commit that ADDED its latest
-    CORRECTNESS file; _changed_since_record silently skips boosting any
-    key whose round file has no adding commit (`sha is None ->
-    continue`). An uncommitted round artifact therefore disables the
-    boost for every key it recorded — this test fails the suite until
-    the file is committed, turning the r12 bookkeeping finding into a
-    standing gate."""
-    import glob
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if registry._git(root, "rev-parse", "HEAD") is None:
-        import pytest
-
-        pytest.skip("not a git checkout")
-    # ADVICE r13: in a shallow/partial clone rev-parse succeeds but the
-    # adding commits of old round files are absent from history, so the
-    # gate would fail spuriously on a valid tree — skip there; the gate
-    # only means something against full history.
-    shallow = (registry._git(
-        root, "rev-parse", "--is-shallow-repository"
-    ) or "").strip()
-    if shallow == "true":
-        import pytest
-
-        pytest.skip("shallow clone: adding commits may be truncated")
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    assert files, "twelve+ rounds in: round history must exist"
-    unanchored = [
-        os.path.basename(p)
-        for p in files
-        if not (
-            registry._git(
-                root,
-                "log",
-                "--format=%H",
-                "--diff-filter=A",
-                "-n",
-                "1",
-                "--",
-                os.path.basename(p),
-            )
-            or ""
-        ).strip()
-    ]
-    assert not unanchored, (
-        "CORRECTNESS round files with no adding commit — the recency "
-        "boost silently skips every key recorded there; commit them "
-        f"before runtime work: {unanchored}"
-    )
+    k = list(registry._REGISTRY)[0]
+    row = {k: {"hash_match": True, "spark_rows": 1, "err": None}}
+    _write_round(tmp_path, 1, row)
+    _write_round(tmp_path, 2, row)
+    bad = tmp_path / "CORRECTNESS_r99.json"
+    bad.write_text('{"truncated": ')
+    with caplog.at_level(logging.WARNING, logger="catena_spark"):
+        counts, _, latest = registry._scan_history(str(tmp_path))
+        registry._scan_history(str(tmp_path))
+    hits = [r for r in caplog.records if str(bad) in r.getMessage()]
+    assert len(hits) == 1 and hits[0].name == "catena_spark"
+    assert counts[k] == 2 and latest[k] == 2

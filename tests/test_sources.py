@@ -3,7 +3,10 @@ compaction invariance + file-count reduction, retention drop."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
+import logging
+import re
 
 import pytest
 
@@ -21,6 +24,21 @@ from tests.conftest import SF_SMALL
 
 def _events(spark):
     return tables.load(spark, SF_SMALL, "events")
+
+
+@contextlib.contextmanager
+def _catena_log(caplog, match=None):
+    """Assert the block logs a ``catena_spark`` WARNING matching
+    ``match`` (the library's fallback channel); ``match=None`` asserts
+    the block logs none."""
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="catena_spark"):
+        yield
+    msgs = [r.getMessage() for r in caplog.records if r.name == "catena_spark"]
+    if match is None:
+        assert msgs == []
+    else:
+        assert any(re.search(match, m) for m in msgs), msgs
 
 
 def test_write_roundtrip_and_pruning(spark, tmp_path):
@@ -161,6 +179,13 @@ def test_kafka_source_gated_with_actionable_error(spark):
         kafka_events_stream(spark, "localhost:9092", "events")
 
 
+def test_has_jvm_class_tells_missing_from_present(spark):
+    from catena_spark.sources.connectors import _has_jvm_class
+
+    assert _has_jvm_class(spark, "java.lang.String")
+    assert not _has_jvm_class(spark, "org.example.catena.NoSuchConnector")
+
+
 def test_lakehouse_sinks_gated_parquet_works(spark, tmp_path):
     """delta/iceberg sinks fail loudly without their runtimes; the
     parquet dispatch path round-trips."""
@@ -193,7 +218,7 @@ def test_no_ntz_timestamp_escapes_load(spark):
         assert not bad, f"{t}: NTZ columns escaped load(): {bad}"
 
 
-def test_bss_detect_and_mitigate(spark, tmp_path):
+def test_bss_detect_and_mitigate(spark, tmp_path, caplog):
     """VERDICT r14 item 5: the BYTE_STREAM_SPLIT mitigation must be
     discoverable in the package, not only in the ops log. Pins the full
     doctrine end-to-end: (1) footer scan finds BSS chunks and names the
@@ -201,8 +226,6 @@ def test_bss_detect_and_mitigate(spark, tmp_path):
     -> the fast vectorized reader stays on), (3) the vectorized reader
     really does reject BSS bytes fail-loud on this Spark build, and
     (4) after mitigation the same bytes decode to the right values."""
-    import warnings
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -226,8 +249,7 @@ def test_bss_detect_and_mitigate(spark, tmp_path):
     orig = spark.conf.get(encodings.VECTORIZED_READER_CONF)
     try:
         # BSS-free: no-op, conf untouched, no warning
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")
+        with _catena_log(caplog):
             assert not encodings.mitigate_byte_stream_split(
                 spark, str(clean)
             )
@@ -239,7 +261,7 @@ def test_bss_detect_and_mitigate(spark, tmp_path):
             with pytest.raises(Exception, match="BYTE_STREAM_SPLIT"):
                 spark.read.parquet(str(dirty)).orderBy("k").collect()
 
-        with pytest.warns(UserWarning, match="BYTE_STREAM_SPLIT"):
+        with _catena_log(caplog, match="BYTE_STREAM_SPLIT"):
             assert encodings.mitigate_byte_stream_split(spark, str(dirty))
         assert (
             spark.conf.get(encodings.VECTORIZED_READER_CONF) == "false"
@@ -532,14 +554,12 @@ def test_int96_detection_uses_schema_descriptor(spark, tmp_path):
     assert sorted(r.when for r in df.collect()) == ts
 
 
-def test_footer_sample_bounds_are_loud(spark, tmp_path):
+def test_footer_sample_bounds_are_loud(spark, tmp_path, caplog):
     """ADVICE r15 sampling semantics: max_files=0 is rejected (it used
     to silently mean 'scan everything'), a truncating bound on the
     superset-schema derivation WARNS (a column only in unsampled files
     is otherwise silently dropped), and a truncated no-hit BSS
     mitigation sample WARNS that unsampled files may still carry BSS."""
-    import warnings
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
@@ -559,20 +579,18 @@ def test_footer_sample_bounds_are_loud(spark, tmp_path):
     with pytest.raises(ValueError, match="max_files"):
         encodings.merged_drifted_schema(str(d), max_files=-1)
 
-    with pytest.warns(UserWarning, match="truncated at max_files"):
+    with _catena_log(caplog, match="truncated at max_files"):
         sch = encodings.merged_drifted_schema(str(d), max_files=2)
     assert "late" not in sch.names  # documented bounded-sample gap
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
+    with _catena_log(caplog):
         full = encodings.merged_drifted_schema(str(d))  # default: all
     assert "late" in full.names
 
-    with pytest.warns(UserWarning, match="sample bound reached"):
+    with _catena_log(caplog, match="sample bound reached"):
         assert not encodings.mitigate_byte_stream_split(
             spark, str(d), max_files=2
         )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # unbounded no-hit scan is silent
+    with _catena_log(caplog):  # unbounded no-hit scan is silent
         assert not encodings.mitigate_byte_stream_split(
             spark, str(d), max_files=None
         )
@@ -1119,7 +1137,7 @@ def _fid(name, typ, i):
     )
 
 
-def test_rename_drift_heals_by_field_id(spark, tmp_path):
+def test_rename_drift_heals_by_field_id(spark, tmp_path, caplog):
     """Rename drift (r17, doctrine class 3 in encodings.py): gen A
     writes ``price`` under parquet field id 2, gen B — after an
     Iceberg/Delta-style rename — writes ``unit_price`` under the SAME
@@ -1179,7 +1197,7 @@ def test_rename_drift_heals_by_field_id(spark, tmp_path):
 
     # cell 2/3 — healed: canonical name 'price' (tie at one file each
     # -> first sighting in sorted order), widened to bigint, no nulls
-    with pytest.warns(UserWarning, match="rename drift healed.*id 2"):
+    with _catena_log(caplog, match="rename drift healed.*id 2"):
         df = encodings.read_drifted(spark, str(d))
     assert df.columns == ["k", "price"]
     assert dict(df.dtypes)["price"] == "bigint"
@@ -1190,7 +1208,7 @@ def test_rename_drift_heals_by_field_id(spark, tmp_path):
     # cell 3b — majority beats sighting order: a third file under the
     # NEW name makes 'unit_price' canonical
     pq.write_table(genB, str(d / "part-0002.parquet"))
-    with pytest.warns(UserWarning, match="rename drift healed"):
+    with _catena_log(caplog, match="rename drift healed"):
         sch = encodings.merged_drifted_schema(str(d))
     assert sch.names == ["k", "unit_price"]
 

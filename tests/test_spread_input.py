@@ -4,7 +4,8 @@
 The spread's SAFE direction is the no-op: a listing failure or an
 already-wide input must insert nothing. These tests pin both fallback
 branches so the behavior can't drift silently, and pin the r18
-per-consumer gate decisions (measured in scripts/r18_ab_spread.py).
+per-consumer gate decisions (measured by the A/B script added in
+da7af74).
 """
 
 from __future__ import annotations
