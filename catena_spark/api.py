@@ -15,11 +15,19 @@
 Design stance (SURVEY.md §3.2): the *DataFrame is the iterator*. catena's
 ``Next()`` walks one point at a time because its storage is a local mmap;
 at 100 TB a per-point cursor is the wrong contract, so ``iterator()``
-returns the time-ordered DataFrame of the series and ``seek`` is a
-filter, not a stateful cursor. The extent-index role is played by the
-Parquet scan: the series equality and ``ts`` filters push into it, and
-files sorted by (source, metric, ts) with INT64 ``ts`` statistics let it
-skip row groups. No read prunes dt windows: every read lists them all.
+returns the DataFrame of the series and ``seek`` is a filter, not a
+stateful cursor. The extent-index role is played by the Parquet scan:
+the series equality and ``ts`` filters push into it, and files sorted by
+(source, metric, ts) with INT64 ``ts`` statistics let it skip row
+groups. No read prunes dt windows: every read's scan covers them all.
+
+A read is cheap to build: the store is listed once per store version
+(``CatenaDB._all``), and each read is one ``spark.sql`` statement over
+that relation with the series and seek bounds as named parameters, so
+building it is a few dozen py4j round-trips, not a Column-API tree of
+hundreds. ``points()`` sorts the series in one reducer (``REPARTITION(1)``
++ ``SORT BY``): two Spark jobs and one scan, where a global ``ORDER BY``
+adds a sampling job that scans the files again.
 Durability maps WAL→parquet commit: a batch is durable when its files
 land (object-store rename), replay-on-open is free because the files are
 the state.
@@ -38,6 +46,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from . import tables
 from .sources import ingest
 
 #: canonical point-row schema (catena Row).
@@ -65,27 +74,52 @@ class InsertResult:
 class SeriesIterator:
     """catena ``Iterator`` equivalent over one (source, metric) series.
 
-    ``df`` is the time-ordered points DataFrame; ``seek``/``after``
-    return new (immutable) iterators — cursors are state, filters are
-    plans, and only plans distribute.
+    An iterator is a filter, not a cursor: the series and the ``seek``
+    bounds are named parameters of one SQL statement over the store's
+    relation. ``df`` is the points DataFrame; ``seek`` returns a new
+    (immutable) iterator — cursors are state, filters are plans, and
+    only plans distribute. No value is pasted into SQL text: Spark binds
+    the parameters as typed literals.
     """
 
-    def __init__(self, df: DataFrame):
-        self.df = df
+    def __init__(self, db: "CatenaDB", args: dict):
+        self._db = db
+        self._args = args
+
+    def _sql(self, select: str, tail: str = "") -> DataFrame:
+        """``SELECT select ... tail`` over the store relation ``{r}``,
+        filtered to the series and seek bounds."""
+        where = " AND ".join(
+            ["source = :source", "metric = :metric"]
+            + [f"ts >= :{k}" for k in self._args if k.startswith("since")]
+        )
+        return self._db.spark.sql(
+            f"SELECT {select} FROM {{r}} WHERE {where} {tail}", args=self._args, r=self._db._all()
+        )
+
+    @property
+    def df(self) -> DataFrame:
+        """The series' points, unordered."""
+        return self._sql("source, metric, ts, value")
 
     def seek(self, ts) -> "SeriesIterator":
         """Position at the first point with ``ts >= given`` (catena
-        ``Seek``): a pushdown filter, not a scan-and-skip."""
-        return SeriesIterator(self.df.where(F.col("ts") >= ts))
+        ``Seek``): a pushdown filter, not a scan-and-skip. Seeks stack;
+        ``seek(None)`` matches no point."""
+        return SeriesIterator(self._db, {**self._args, f"since{len(self._args)}": ts})
 
     def first(self):
         """The point under the cursor (catena ``Point()`` after Seek)."""
-        rows = self.df.orderBy("ts", "value").limit(1).collect()
+        rows = self._sql("source, metric, ts, value", "ORDER BY ts, value LIMIT 1").collect()
         return rows[0] if rows else None
 
     def points(self) -> DataFrame:
-        """All remaining points, time-ordered."""
-        return self.df.orderBy("ts", "value")
+        """All remaining points, ordered by (ts, value) in one partition:
+        one shuffle into a single reducer that sorts the series (two
+        Spark jobs and one scan; a global ORDER BY adds a sampling job
+        that scans the files a second time). One series is one reducer's
+        work; a read of many series belongs on ``df``."""
+        return self._sql("/*+ REPARTITION(1) */ source, metric, ts, value", "SORT BY ts, value")
 
 
 class CatenaDB:
@@ -104,6 +138,8 @@ class CatenaDB:
         #: newest-N dt windows accept writes (catena: memory partitions);
         #: older windows are rotated out and reject inserts.
         self.writable_partitions = writable_partitions
+        #: (store version, relation) of the last listing, see ``_all``
+        self._relation: tuple | None = None
 
     # ------------------------------------------------------------ lifecycle
 
@@ -162,25 +198,31 @@ class CatenaDB:
         row: AQE replaces a shuffle stage that wrote nothing by an empty
         relation, and metrics observed inside it would be lost whenever
         no row is writable. A batch with no writable row writes no data
-        file and no dt directory."""
+        file and no dt directory.
+
+        The plan is built from SQL text (each Column-API call is a dozen
+        or more py4j round-trips). The sort leads with ``dt``: the
+        planned write sorts by its partition column, and a sort that
+        does not start with ``dt`` is dropped under it, leaving files
+        unsorted by series."""
         parts = self._partitions()
-        dt = F.col("dt")
         if len(parts) >= self.writable_partitions:
-            late = dt < parts[-self.writable_partitions]
+            # a dt name, so _DT_RE has checked what goes into the text
+            late = f"dt < '{parts[-self.writable_partitions]}'"
         else:
-            late = F.lit(False)
+            late = "false"
         obs = Observation()
         (
-            ingest.with_dt(rows.select("source", "metric", "ts", "value"))
+            rows.selectExpr("source", "metric", "ts", "value", f"{ingest.dt_sql()} AS dt")
             .repartition("dt")
             .observe(
                 obs,
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(dt.isNull()).alias("invalid"),
-                F.count_if(late).alias("late"),
+                F.expr("count(1) AS n"),
+                F.expr("count_if(dt IS NULL) AS invalid"),
+                F.expr(f"count_if({late}) AS late"),
             )
-            .where(dt.isNotNull() & ~late)
-            .sortWithinPartitions("source", "metric", "ts")
+            .where(f"dt IS NOT NULL AND NOT ({late})")
+            .sortWithinPartitions("dt", "source", "metric", "ts")
             .write.mode("append")
             .partitionBy("dt")
             .parquet(self.base_dir)
@@ -195,20 +237,28 @@ class CatenaDB:
     # ------------------------------------------------------------ read path
 
     def _all(self) -> DataFrame:
+        """The store as one relation, listed once per store version.
+
+        The version (every file's relative path, mtime and size) is
+        taken before the listing, so a write that lands during it makes
+        the next read list again: a concurrent write can cost a miss,
+        never a stale hit. A path off the local filesystem has no
+        version and is listed on every read."""
         # explicit schema makes reads total on a freshly created (empty)
         # DB — schema inference over zero files raises (r5, self-review)
-        return self.spark.read.schema(_STORED_DDL).parquet(self.base_dir)
+        version = tables.file_version(self.base_dir)
+        if version is not None and self._relation and self._relation[0] == version:
+            return self._relation[1]
+        df = self.spark.read.schema(_STORED_DDL).parquet(self.base_dir)
+        self._relation = None if version is None else (version, df)
+        return df
 
     def iterator(self, source: str, metric: str) -> SeriesIterator:
         """``NewIterator``: the series equality filters, and the ``ts``
         filters of ``seek`` and range reads, push into the Parquet scan;
         row-group statistics of files sorted by (source, metric, ts) are
-        the extent index. Every dt window is listed (no dt pruning)."""
-        return SeriesIterator(
-            self._all()
-            .where((F.col("source") == source) & (F.col("metric") == metric))
-            .select("source", "metric", "ts", "value")
-        )
+        the extent index. Every dt window is scanned (no dt pruning)."""
+        return SeriesIterator(self, {"source": source, "metric": metric})
 
     def list_series(self) -> DataFrame:
         """Series enumeration (B4)."""
@@ -221,9 +271,7 @@ class CatenaDB:
         higher value, NaN is the largest value, NULL the smallest."""
         rows = (
             self.iterator(source, metric)
-            .df.orderBy(F.col("ts").desc(), F.col("value").desc())
-            .select("ts", "value")
-            .limit(1)
+            ._sql("ts, value", "ORDER BY ts DESC, value DESC LIMIT 1")
             .collect()
         )
         return rows[0] if rows else None

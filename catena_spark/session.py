@@ -27,6 +27,7 @@ from __future__ import annotations
 import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 _LOG = logging.getLogger("catena_spark")
@@ -76,6 +77,9 @@ def env_int(name: str, default: int) -> int:
             f"the default {default})"
         ) from None
 
+
+#: runtime conf keys a session has refused, each logged once per process
+_refused_logged: set[str] = set()
 
 #: set once a failed package ship has been logged: ensure_runtime_conf
 #: retries the ship on every load, the warning is issued once per process
@@ -131,8 +135,18 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static-only conf on some builds; never fatal
+        except AnalysisException as e:
+            # static-only conf on some builds: not fatal, but recorded
+            if k not in _refused_logged:
+                _refused_logged.add(k)
+                _LOG.warning(
+                    "catena_spark: the session refused conf %s=%s (%s); "
+                    "it keeps %r",
+                    k,
+                    v,
+                    e.getCondition(),
+                    spark.conf.get(k, None),
+                )
     # Read back the keys oracle hash parity actually depends on — a
     # silently-ignored failure here would corrupt every timestamp hash
     # with no signal (ADVICE r1). Loud beats lenient.

@@ -12,7 +12,10 @@ Catena's storage layer mapped 1:1 (SURVEY.md §1.2 table):
 The sort-within-partitions on (source, metric, ts) is the one physical-
 design obligation we carry from catena: it makes Parquet row-group
 min/max stats selective for per-series time-range scans — the same role
-as catena's extent index (SURVEY.md §4).
+as catena's extent index (SURVEY.md §4). Every writer here sorts by
+(dt, source, metric, ts): a partitioned write sorts by ``dt`` itself,
+and Spark drops a sort that does not lead with ``dt`` under that one,
+which left the files unsorted by series.
 
 Scale: the dt layout makes retention and compaction per-window
 directory operations. Reads filter on ``ts``, not on ``dt``, so they do
@@ -44,23 +47,29 @@ EVENTS_DDL = (
 )
 
 
+def dt_sql(ts_col: str = "ts") -> str:
+    """SQL text of the time-bucket (dt window) of ``ts_col``."""
+    return f"date_format({ts_col}, 'yyyy-MM-dd')"
+
+
 def with_dt(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """A3 partition rotation: derive the time-bucket partition column."""
-    return df.withColumn("dt", F.date_format(ts_col, "yyyy-MM-dd"))
+    return df.withColumn("dt", F.expr(dt_sql(ts_col)))
 
 
 def write_partitioned(df: DataFrame, path: str, ts_col: str = "ts") -> None:
     """A1 batch insert path: time-bucketed, series-clustered parquet.
 
-    sortWithinPartitions(source-key, metric-key, ts) == catena clustering
-    points by series inside a partition file; row-group stats become the
-    extent index.
+    sortWithinPartitions(dt, source-key, metric-key, ts) == catena
+    clustering points by series inside a partition file; row-group stats
+    become the extent index. The sort leads with the partition column
+    ``dt`` so the write's own sort by ``dt`` does not replace it.
     """
     cluster = [c for c in ("user_id", "event_type", "source", "metric") if c in df.columns]
     (
         with_dt(df, ts_col)
         .repartition("dt")
-        .sortWithinPartitions(*cluster, ts_col)
+        .sortWithinPartitions("dt", *cluster, ts_col)
         .write.mode("overwrite")
         .partitionBy("dt")
         .parquet(path)
@@ -143,7 +152,7 @@ def compact(
         df.withColumn("_bucket", bucket)
         .repartition(len(dirty) * n, "dt", "_bucket")
         .drop("_bucket")
-        .sortWithinPartitions(*cluster, "ts")
+        .sortWithinPartitions("dt", *cluster, "ts")
         .write.partitionBy("dt")
         .parquet(str(tmp))
     )

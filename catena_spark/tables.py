@@ -82,7 +82,7 @@ _INFERENCE_CONFS = (
 _SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
 
 
-def _file_version(path: str) -> tuple | None:
+def file_version(path: str) -> tuple | None:
     """``(mtime_ns, size)`` of a file, or the sorted ``(relpath,
     mtime_ns, size)`` of every file under a directory; None when the
     path is not on the local filesystem or changes under the walk (such
@@ -108,7 +108,7 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema ``spark.read.parquet(path)`` infers, inferred once per
     file version and inference conf; a new version of ``path`` replaces
     its entry."""
-    version = _file_version(path)
+    version = file_version(path)
     if version is None:
         return spark.read.parquet(path).schema
     key = (version, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))

@@ -418,3 +418,174 @@ def test_compact_cut_short_recovers_on_open(spark, db, monkeypatch, crash_at):
     db2.compact()
     assert _stored(db2) == before
     assert [len(list(p.glob("*.parquet"))) for p in sorted(pathlib.Path(db.base_dir).glob("dt=*"))] == [1, 1]
+
+
+# ------------------------------------------------------- sorted files
+
+
+def _random_rows(spark, n=20000, seed=7):
+    """``n`` points over 2 days and 100 series, in random order."""
+    import random
+
+    rnd = random.Random(seed)
+    t0 = datetime.datetime(2026, 1, 10)
+    data = [
+        (
+            f"s{rnd.randrange(20)}",
+            f"m{rnd.randrange(5)}",
+            t0 + datetime.timedelta(seconds=rnd.randrange(2 * 86400)),
+            float(i),
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(data, "source string, metric string, ts timestamp, value double")
+
+
+def _assert_files_sorted(root):
+    """Every parquet file under ``root`` holds its rows sorted by
+    (source, metric, ts): the row groups' statistics are the extent
+    index only then."""
+    import pyarrow.parquet as pq
+
+    files = sorted(pathlib.Path(root).glob("dt=*/*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["source", "metric", "ts"]).to_pydict()
+        keys = list(zip(t["source"], t["metric"], t["ts"]))
+        assert keys == sorted(keys), f"{f} is not sorted by (source, metric, ts)"
+
+
+def test_insert_and_compact_write_series_sorted_files(spark, db):
+    db.insert_rows(_random_rows(spark))
+    _assert_files_sorted(db.base_dir)
+    db.insert_rows(_random_rows(spark, seed=8))
+    db.compact()
+    assert [len(list(p.glob("*.parquet"))) for p in sorted(pathlib.Path(db.base_dir).glob("dt=*"))] == [1, 1]
+    _assert_files_sorted(db.base_dir)
+
+
+def test_write_partitioned_writes_series_sorted_files(spark, tmp_path):
+    from catena_spark.sources import ingest
+
+    ingest.write_partitioned(_random_rows(spark), str(tmp_path / "store"))
+    _assert_files_sorted(tmp_path / "store")
+
+
+# ------------------------------------------------------- lean reads
+
+
+def _py4j_commands(spark, fn):
+    """Fewest py4j commands ``fn()`` sent in three warm calls (cyclic GC
+    off while counting: a collection can free Java handles of earlier
+    work in the middle of a call)."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    sent = [0]
+    orig = client.send_command
+
+    def counting(*a, **k):
+        sent[0] += 1
+        return orig(*a, **k)
+
+    fn()
+    counts = []
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        for _ in range(3):
+            sent[0] = 0
+            fn()
+            counts.append(sent[0])
+    finally:
+        del client.send_command
+        gc.enable()
+    return min(counts)
+
+
+def test_warm_point_reads_send_few_py4j_commands(spark, db):
+    """A read is one parameterized statement over a cached relation, not
+    a tree of Column-API calls (each one a dozen or more round-trips)."""
+    db.insert_rows(_rows(spark, [0, 1]))
+    seek = datetime.datetime(2026, 1, 10, 12, 1)
+    assert _py4j_commands(spark, lambda: db.iterator("cpu0", "util").seek(seek).first()) <= 40
+    assert _py4j_commands(spark, lambda: db.latest("cpu0", "util")) <= 40
+
+
+def test_points_is_two_jobs_in_ts_then_value_order(spark, db):
+    t0 = datetime.datetime(2026, 1, 10, 12, 0, 0)
+    data = [
+        ("s", "m", t0 + datetime.timedelta(minutes=m), v)
+        for m, v in [(2, 5.0), (1, 9.0), (2, 1.0), (0, 3.0), (1, 2.0), (2, 3.0)]
+    ]
+    db.insert_rows(spark.createDataFrame(data, "source string, metric string, ts timestamp, value double"))
+    db.insert_rows(_rows(spark, [0]))  # another series, another file
+    rows, jobs = _jobs(spark, lambda: db.iterator("s", "m").points().collect())
+    assert jobs == 2
+    assert [(r["ts"], r["value"]) for r in rows] == sorted((t, v) for _, _, t, v in data)
+    pts = db.iterator("s", "m").seek(t0 + datetime.timedelta(minutes=1)).points().collect()
+    assert [r["value"] for r in pts] == [2.0, 9.0, 1.0, 3.0, 5.0]
+
+
+def test_unchanged_store_reuses_its_relation(spark, db, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameReader
+
+    db.insert_rows(_rows(spark, [0]))
+    db.iterator("cpu0", "util").first()
+    listed = []
+    real = DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, *p, **k: listed.append(p) or real(self, *p, **k))
+    assert db.iterator("cpu0", "util").seek(datetime.datetime(2026, 1, 10)).first()["value"] == 0.0
+    assert db.latest("cpu0", "util")["value"] == 2.0
+    assert db.iterator("cpu0", "util").points().count() == 3
+    assert listed == []
+    db.insert_rows(_rows(spark, [1]))
+    assert db.latest("cpu0", "util")["value"] == 12.0
+    assert len(listed) == 1
+
+
+def test_reads_see_every_change_to_the_store(spark, db):
+    """The cached relation never serves a stale listing: a write by
+    another CatenaDB on the same dir, a compaction swap and a retention
+    drop are each seen by the next read."""
+    def values():
+        return sorted(r["value"] for r in db.iterator("cpu0", "util").points().collect())
+
+    db.insert_rows(_rows(spark, [0]))
+    assert values() == [0.0, 1.0, 2.0]
+    other = CatenaDB.open(spark, db.base_dir)
+    other.insert_rows(_rows(spark, [1]))
+    assert values() == [0.0, 1.0, 2.0, 10.0, 11.0, 12.0]
+    assert db.latest("cpu0", "util")["value"] == 12.0
+    other.insert_rows(_rows(spark, [1]))  # a second file in window 11
+    want = sorted([0.0, 1.0, 2.0] + 2 * [10.0, 11.0, 12.0])
+    assert values() == want
+    db.compact()  # window 11's files are replaced
+    assert values() == want
+    assert db.enforce_retention(max_partitions=1) == ["dt=2026-01-10"]
+    assert values() == [10.0, 10.0, 11.0, 11.0, 12.0, 12.0]
+    assert db.iterator("cpu0", "util").first()["value"] == 10.0
+
+
+def test_seek_none_matches_no_point(spark, db):
+    db.insert_rows(_rows(spark, [0]))
+    it = db.iterator("cpu0", "util")
+    assert it.seek(None).first() is None
+    assert it.seek(None).points().count() == 0
+    assert it.seek(None).df.count() == 0
+
+
+def test_read_values_are_bound_not_pasted(spark, db):
+    """A series name is a bound value, never SQL text."""
+    db.insert_rows(_rows(spark, [0]))
+    quote = "cpu0' OR '1'='1"
+    assert db.latest(quote, "util") is None
+    assert db.iterator(quote, "util").df.count() == 0
+    rows = spark.createDataFrame(
+        [(quote, "util", datetime.datetime(2026, 1, 10, 13), 7.0)],
+        "source string, metric string, ts timestamp, value double",
+    )
+    db.insert_rows(rows)
+    assert db.latest(quote, "util")["value"] == 7.0
+    assert db.iterator("cpu0", "util").points().count() == 3

@@ -1797,3 +1797,24 @@ def test_package_ship_failure_logs_once(spark, monkeypatch, caplog):
     assert len(records) == 1
     assert records[0].levelno == logging.WARNING
     assert "OSError: no space left for the package zip" in records[0].getMessage()
+
+
+def test_refused_runtime_conf_logs_once_per_key(spark, monkeypatch, caplog):
+    """A runtime conf key the session refuses (here a static SQL conf)
+    is not fatal, but is logged on the catena_spark logger once per
+    process, naming the key; the other keys are still applied."""
+    import logging
+
+    from catena_spark import session
+
+    key = "spark.sql.catalogImplementation"
+    monkeypatch.setitem(session._RUNTIME_CONF, key, "hive")
+    monkeypatch.setattr(session, "_refused_logged", set())
+    with caplog.at_level(logging.WARNING, logger="catena_spark"):
+        session.ensure_runtime_conf(spark)
+        session.ensure_runtime_conf(spark)
+    records = [r for r in caplog.records if r.name == "catena_spark"]
+    assert len(records) == 1
+    assert key in records[0].getMessage()
+    assert spark.conf.get(key) != "hive"
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
