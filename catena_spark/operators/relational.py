@@ -22,13 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import tables
-from ..parity import (
-    duck_det_double,
-    duck_usum,
-    spark_det_double,
-    usum,
-    usum_long,
-)
+from ..parity import det_double, duck_usum, usum, usum_long
 from ..registry import query
 from ..twophase import grouped_positions
 
@@ -61,15 +55,15 @@ def scan_lineitem_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00')
     SELECT l_returnflag, l_linestatus,
-           {duck_det_double("sum(qi)")}                         AS sum_qty,
-           {duck_det_double("sum(pc)")} / 100.0                 AS sum_base,
-           {duck_det_double("sum(pc * (100 - dc))")} / 10000.0  AS sum_disc_price,
-           {duck_det_double("sum(pc * (100 - dc) * (100 + tc))")} / 1000000.0
-                                                                AS sum_charge,
-           {duck_det_double("sum(qi)")} / CAST(count(*) AS DOUBLE)   AS avg_qty,
-           {duck_det_double("sum(pc)")} / CAST(100 * count(*) AS DOUBLE) AS avg_price,
-           {duck_det_double("sum(dc)")} / CAST(100 * count(*) AS DOUBLE) AS avg_disc,
-           count(*)                                             AS cnt
+           {det_double("sum(qi)")}                         AS sum_qty,
+           {det_double("sum(pc)")} / 100.0                 AS sum_base,
+           {det_double("sum(pc * (100 - dc))")} / 10000.0  AS sum_disc_price,
+           {det_double("sum(pc * (100 - dc) * (100 + tc))")} / 1000000.0
+                                                           AS sum_charge,
+           {det_double("sum(qi)")} / CAST(count(*) AS DOUBLE)   AS avg_qty,
+           {det_double("sum(pc)")} / CAST(100 * count(*) AS DOUBLE) AS avg_price,
+           {det_double("sum(dc)")} / CAST(100 * count(*) AS DOUBLE) AS avg_disc,
+           count(*)                                        AS cnt
     FROM u GROUP BY l_returnflag, l_linestatus
     """,
 )
@@ -87,18 +81,19 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     division producing bit-identical doubles. Spark sums in decimal(38,0)
     (long would wrap around 9.2e18 — reachable for the 1e-6-unit charge
     sum near ~1e12 rows); DuckDB's BIGINT sum auto-promotes to HUGEINT.
-    r6: that final conversion is spark_det_double/duck_det_double, so the
-    bit-identity survives past 2^63 where the engines' native big-int
-    casts round differently (ADVICE r5 item 2); below 2^53 it equals
-    the exact conversion — no value change at test scale.
+    That final conversion is parity.det_double, the same SQL text in
+    both engines: the sum's decimal digit string parsed as a double,
+    correctly rounded in both, so the bit-identity survives past 2^64,
+    where DuckDB's native HUGEINT cast rounds twice; below 2^53 it
+    equals the exact conversion.
 
     Scale: map-side partial aggregation, 6-group shuffle; the shipdate
     predicate reaches the Parquet scan (PushedFilters) so at 100 TB only
     qualifying row groups are read.
     """
     li = tables.load(spark, sf_dir, "lineitem")
-    # SQL text, like the oracle: each det_double kernel is one
-    # server-side parse instead of a ~140-call py4j Column tree.
+    # SQL text, like the oracle: each aggregate is one server-side parse
+    # instead of a py4j Column tree.
     qi = "CAST(l_quantity AS BIGINT)"
     pc = "CAST(round(l_extendedprice * 100, 0) AS BIGINT)"
     dc = "CAST(round(l_discount * 100, 0) AS BIGINT)"
@@ -107,7 +102,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq, spc, sdc = dec_sum(qi), dec_sum(pc), dec_sum(dc)
     sdp = dec_sum(f"({pc}) * (100 - {dc})")
     sch = dec_sum(f"({pc}) * (100 - {dc}) * (100 + {tc})")
-    dd = spark_det_double
+    dd = det_double
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -1480,17 +1475,17 @@ def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
                    * CAST(round(l_extendedprice * 100, 0) AS BIGINT)) AS sqp
         FROM lineitem GROUP BY l_returnflag)
     SELECT l_returnflag,
-           sqrt({duck_det_double("n * sq2 - sq * sq")}
-                / {duck_det_double("n * (n - 1)")})             AS sd_qty,
-           {duck_det_double("n * sq2 - sq * sq")}
-               / {duck_det_double("n * (n - 1)")}               AS var_qty,
-           sqrt({duck_det_double("n * sdc2 - sdc * sdc")}
-                / {duck_det_double("n * n * 10000")})           AS sdp_disc,
-           {duck_det_double("n * sqp - sq * spc")}
-               / (sqrt({duck_det_double("n * sq2 - sq * sq")})
-                  * sqrt({duck_det_double("n * spc2 - spc * spc")})) AS corr_qty_price,
-           {duck_det_double("n * sqp - sq * spc")}
-               / {duck_det_double("n * (n - 1)")} / 100.0       AS covar_qty_price
+           sqrt({det_double("n * sq2 - sq * sq")}
+                / {det_double("n * (n - 1)")})             AS sd_qty,
+           {det_double("n * sq2 - sq * sq")}
+               / {det_double("n * (n - 1)")}               AS var_qty,
+           sqrt({det_double("n * sdc2 - sdc * sdc")}
+                / {det_double("n * n * 10000")})           AS sdp_disc,
+           {det_double("n * sqp - sq * spc")}
+               / (sqrt({det_double("n * sq2 - sq * sq")})
+                  * sqrt({det_double("n * spc2 - spc * spc")})) AS corr_qty_price,
+           {det_double("n * sqp - sq * spc")}
+               / {det_double("n * (n - 1)")} / 100.0       AS covar_qty_price
     FROM m
     """,
 )
@@ -1508,13 +1503,14 @@ def agg_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic double arithmetic on bit-identical inputs: cast,
     subtract, IEEE sqrt, divide — no round, no engine internals.
 
-    r6 (ADVICE r5 item 2): the moment->double casts go through
-    spark_det_double/duck_det_double because the squared price moments
-    reach 1e23–1e24 at sf0.1 — far past 2^63, where DuckDB's
-    double-rounded HUGEINT cast and Spark's correctly rounded decimal
-    cast can differ by 1 ulp near a rounding boundary. The limb-split
-    conversion is bit-identical in both engines at any magnitude. The
-    outer select is SQL text, so it reads line for line like the oracle.
+    The moment->double casts go through parity.det_double because the
+    squared price moments reach 1e23–1e24 at sf0.1 — far past 2^64,
+    where DuckDB's double-rounded native HUGEINT cast and Spark's
+    correctly rounded decimal cast can differ by 1 ulp near a rounding
+    boundary. det_double is the same digit-string cast in both engines
+    and correctly rounded in both, so every moment is the same double
+    at any magnitude. The outer select is SQL text, so it reads line
+    for line like the oracle.
 
     Scale: the moment sums are plain partial-aggregatable SUMs — same
     single-pass shuffle shape as the built-in aggregates they replace.
@@ -1546,7 +1542,7 @@ def agg_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((pc * pc).cast(dec)).alias("spc2"),
         F.sum((qi * pc).cast(dec)).alias("sqp"),
     )
-    dd = spark_det_double
+    dd = det_double
     var_qty = f"{dd('n * sq2 - sq * sq')} / {dd('n * (n - 1)')}"
     return m.selectExpr(
         "l_returnflag",

@@ -180,22 +180,6 @@ def test_ewma_single_exchange_partition_fold(spark):
     assert "FlatMapGroupsInPandas" not in plan
 
 
-def test_q3_det_double_fast_path_survives_optimizer(spark):
-    """The r9 sub-2^53 fast path in parity.spark_det_double (VERDICT r7/r8
-    item 1) must stay on q3's final-cast hot path: Catalyst renders it
-    as a CASE bounded by +/-9007199254740992 around the native cast,
-    with the string-limb kernel (lpad) demoted to the >2^53 escape
-    branch. If a refactor drops the fast path, q3 regresses 42->74 ms
-    (A/B-proven r7) — pin the plan shape, not just the timing."""
-    df = rel.topk_revenue_q3(spark, SF_SMALL)
-    plan = formatted_plan(df)
-    assert "9007199254740992" in plan, (
-        "sub-2^53 native-cast fast path missing from q3 plan:\n" + plan[:3000]
-    )
-    # the limb escape hatch must also survive (exactness past 2^53)
-    assert "lpad" in plan, plan[:3000]
-
-
 def test_null_semantics_no_single_partition_window(spark):
     """r10: fn_null_semantics's global count must be the broadcast
     1-row-scalar pattern, NOT an unpartitioned WindowExec — the latter

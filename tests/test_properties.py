@@ -606,58 +606,81 @@ def test_decimal_threshold_predicate_exact_within_envelope(spark):
         assert got[(dot, n2a, n2b)] == exact, (dot, n2a, n2b)
 
 
+def _limb_double(x: int) -> float:
+    """The retired base-1e9 limb kernel: exact limbs recombined as
+    ``((l3*1e9 + l2)*1e9 + l1)*1e9 + l0`` — deterministic but not
+    correctly rounded past 2^53."""
+    a = abs(x)
+    l3, l2 = a // 10**27, (a % 10**27) // 10**18
+    l1, l0 = (a % 10**18) // 10**9, a % 10**9
+    mag = ((float(l3) * 1e9 + float(l2)) * 1e9 + float(l1)) * 1e9 + float(l0)
+    return -mag if x < 0 else mag
+
+
 def test_det_double_bit_identical_across_engines(spark, duck):
-    """spark_det_double/duck_det_double (r6, ADVICE r5 item 2): the
-    limb-split big-integer->double conversion must produce the SAME
-    double in Spark, DuckDB, and a pure-Python reference at every
-    magnitude of the decimal(38,0)/HUGEINT range — and the
-    mathematically exact value below 2^53. This is what lets
-    usum/usum_long/agg_stats_suite keep their bit-identity claim past 2^63, where the engines' native casts
-    (DuckDB's double-rounded HUGEINT path vs Spark's correctly rounded
-    decimal path) can differ by 1 ulp."""
+    """parity.det_double is ONE SQL text for both engines and must return
+    the correctly rounded double ``float(x)`` in Spark and in DuckDB at
+    every magnitude of the decimal(38,0) range: exact below 2^53, the
+    same double across 2^53 +/- k, and ties-to-even on built half-way
+    points past 2^64 — where DuckDB's native HUGEINT cast rounds twice.
+    That is what lets usum/usum_long/agg_stats_suite keep their
+    bit-identity claim at any magnitude.
+
+    Inputs are exact: Python ``Decimal`` values in a decimal(38,0)
+    column for Spark (Spark's string->decimal cast rounds to 34
+    digits) and HUGEINT literals for DuckDB."""
+    import decimal
     import random
 
     from pyspark.sql import functions as F
 
-    from catena_spark.parity import duck_det_double, spark_det_double
+    from catena_spark.parity import det_double
 
-    def py_det(x: int) -> float:
-        a = abs(x)
-        l3, l2 = a // 10**27, (a % 10**27) // 10**18
-        l1, l0 = (a % 10**18) // 10**9, a % 10**9
-        mag = ((float(l3) * 1e9 + float(l2)) * 1e9 + float(l1)) * 1e9 + float(l0)
-        return -mag if x < 0 else mag
-
+    P = 2**53
     rng = random.Random(20260814)
-    cases = [0, 1, -1, 2**53 - 1, 2**53, 2**53 + 1, 2**63 - 1, 2**63,
-             2**63 + 2**11, -(2**63), 10**24, -(10**24), 10**38 - 1,
+    cases = [0, 1, -1, 42, 2**63 - 1, 2**63, 2**63 + 2**11, -(2**63),
+             10**24, -(10**24), 10**30 + 7, -(10**30 + 7), 10**38 - 1,
              -(10**38) + 1]
+    cases += [P + k for k in range(-3, 4)] + [-(P + k) for k in range(-2, 3)]
+    cases += [P + 111, -(P + 111)]
+    cases += [rng.randrange(P - 50, P + 50) * s for _ in range(30) for s in (1, -1)]
     for bits in (40, 52, 53, 54, 62, 63, 64, 70, 80, 100, 126):
         cases += [rng.randrange(-(2**bits), 2**bits) for _ in range(20)]
-
-    # inject full-width decimals directly (casts and decimal arithmetic
-    # in Spark round through a 34-digit DECIMAL128 context, so a string
-    # cast or limb composition could not build an exact 38-digit value)
-    import decimal as _d
+    # half-way ties between adjacent doubles m*2^(e-52) and (m+1)*2^(e-52)
+    # (m odd and even, so ties-to-even goes both ways), and one unit either
+    # side of each tie
+    for e in (64, 65, 70, 80, 100, 125):
+        for m in (2**52, 2**52 + 1, 2**53 - 2, 2**53 - 1,
+                  rng.randrange(2**52, 2**53)):
+            tie = m * 2 ** (e - 52) + 2 ** (e - 53)
+            cases += [tie - 1, tie, tie + 1, -tie]
+    assert all(abs(x) < 10**38 for x in cases)
 
     sdf = spark.createDataFrame(
-        [(_d.Decimal(x),) for x in cases], "v decimal(38,0)"
+        [(decimal.Decimal(x),) for x in cases], "v decimal(38,0)"
     )
     got_spark = [
-        r["d"]
-        for r in sdf.select(F.expr(spark_det_double("v")).alias("d")).collect()
+        r["d"] for r in sdf.select(F.expr(det_double("v")).alias("d")).collect()
     ]
     got_duck = [
-        duck.execute(
-            "SELECT " + duck_det_double(f"CAST('{x}' AS HUGEINT)")
-        ).fetchone()[0]
+        duck.execute(f"SELECT {det_double(f'CAST({str(x)!r} AS HUGEINT)')}").fetchone()[0]
         for x in cases
     ]
     for x, ds, dd in zip(cases, got_spark, got_duck):
-        want = py_det(x)
-        assert ds == dd == want, (x, ds, dd, want)
-        if abs(x) < 2**53:
-            assert ds == float(x), (x, ds)
+        assert ds == dd == float(x), (x, ds, dd, float(x))
+
+    # teeth: the fixture reaches values where DuckDB's native cast and the
+    # old limb kernel each miss the correctly rounded double
+    native = [
+        duck.execute(f"SELECT CAST(CAST({str(x)!r} AS HUGEINT) AS DOUBLE)").fetchone()[0]
+        for x in cases
+    ]
+    assert any(n != float(x) for x, n in zip(cases, native)), (
+        "fixture lost its teeth: DuckDB's native cast is right on every case"
+    )
+    assert any(_limb_double(x) != float(x) for x in cases), (
+        "fixture lost its teeth: the limb kernel is right on every case"
+    )
 
 
 def test_integer_halfup_avg_threshold_matches_reference(duck):
@@ -690,14 +713,12 @@ def test_integer_halfup_avg_threshold_matches_reference(duck):
 
 @pytest.mark.parametrize("kernel", ["usum", "usum_long"])
 def test_usum_long_matches_duck_usum_past_2pow53(spark, duck, kernel):
-    """usum/usum_long ≡ duck_usum over the FULL BIGINT unit-sum range
-    (r7, ADVICE r6 item 1): before r7 usum_long's final cast was Spark's
-    native long->double, which only matches the oracle's duck_det_double
-    path below 2^53 — a unit sum in [2^53, 2^63) would drift ~1 ulp.
-    Both Spark sums route through spark_det_double, so each must be
-    bit-identical to duck_usum (and equal to the pure-Python limb
-    reference) at every magnitude. Inputs are multiples of 10^13 so
-    value*10^scale round-trips exactly through double in both engines."""
+    """usum/usum_long ≡ duck_usum over the FULL BIGINT unit-sum range:
+    both Spark sums and duck_usum end in the same det_double text, so
+    each must be bit-identical to duck_usum and equal to the correctly
+    rounded ``float(unit_sum) / 100`` at every magnitude. Inputs are
+    multiples of 10^13 so value*10^scale round-trips exactly through
+    double in both engines."""
     import random
 
     from catena_spark import parity
@@ -707,20 +728,12 @@ def test_usum_long_matches_duck_usum_past_2pow53(spark, duck, kernel):
 
     rng = random.Random(20260814)
 
-    def py_det(x: int) -> float:
-        a = abs(x)
-        l3, l2 = a // 10**27, (a % 10**27) // 10**18
-        l1, l0 = (a % 10**18) // 10**9, a % 10**9
-        mag = ((float(l3) * 1e9 + float(l2)) * 1e9 + float(l1)) * 1e9 + float(l0)
-        return -mag if x < 0 else mag
-
     # per-group lists of scale-2 UNIT integers; value = u / 100. Each
     # gap-range group pairs one huge multiple-of-10^16 unit (value a
     # multiple of 10^14 — an exact double) with one cents-scale unit
     # (< 2^53; value/100 round-trips through round(v*100) like every
     # production money column), so the group sum lands in [2^53, 2^63)
-    # WITH non-zero low limbs — exactly where limb recombination and
-    # the old native long->double cast disagree (asserted below).
+    # at an integer no double represents exactly (asserted below).
     groups = {
         "below53": [100, 250, 512345, 2**52],
         "gap_a": [5040000000000000000, 7190709584],
@@ -730,10 +743,10 @@ def test_usum_long_matches_duck_usum_past_2pow53(spark, duck, kernel):
         + [rng.randrange(10**8, 10**11) for _ in range(40)],
     }
     rows = [(g, u / 100.0) for g, items in groups.items() for u in items]
-    assert sum(py_det(sum(u)) != float(sum(u)) for u in
-               (groups["gap_a"], groups["gap_b"], groups["gap_c"])) == 3, (
-        "fixture lost its teeth: gap sums no longer hit the 1-ulp "
-        "limb-vs-native-cast divergence the old code had"
+    gap_sums = [sum(items) for g, items in groups.items() if g != "below53"]
+    assert all(int(float(u)) != u for u in gap_sums), (
+        "fixture lost its teeth: a gap sum is exactly representable, so "
+        "it cannot tell a rounding kernel from the exact conversion"
     )
     sdf = spark.createDataFrame(rows, "g string, v double")
     got_spark = {
@@ -751,82 +764,69 @@ def test_usum_long_matches_duck_usum_past_2pow53(spark, duck, kernel):
     for g, items in groups.items():
         unit_sum = sum(items)
         assert unit_sum < 2**63, (g, unit_sum)  # stays a valid BIGINT
-        want = py_det(unit_sum) / 100.0
+        want = float(unit_sum) / 100
         assert got_spark[g] == got_duck[g] == want, (
             g, unit_sum, got_spark[g], got_duck[g], want,
         )
-        if unit_sum < 2**53:
-            assert got_spark[g] == unit_sum / 100.0, (g, got_spark[g])
 
 
-def test_det_double_fast_path_straddles_2pow53(spark, duck):
-    """r9 (VERDICT r7/r8 item 1): spark_det_double's sub-2^53
-    native-cast fast path must be invisible at the value level — for
-    every integer, the Spark kernel, the DuckDB twin, and a pure-Python
-    limb/native reference that branches on the identical predicate
-    produce the SAME double, including exactly at 2^53 +/- 1 where the
-    branch flips.
-    Inputs are fed as exact decimal(38,0)/HUGEINT literals (no float
-    round-trip), so this pins the cast kernel itself, not usum's
-    quantization."""
+def test_agg_stats_suite_matches_oracle_past_2pow64(spark, tmp_path):
+    """agg_stats_suite on a synthetic lineitem equals its DuckDB oracle
+    exactly once the price moment ``n*spc2 - spc*spc`` passes 2^64,
+    where DuckDB's native HUGEINT->DOUBLE cast rounds twice.
+
+    Group 'A' is built: 1,000 rows at two cent prices a and b (k of
+    them at a), so its moment is k*(n-k)*(a-b)^2 ~ 1.9e19. The price gap
+    is one where the native cast misses the correctly rounded double
+    and the miss survives into corr_qty_price, so the same oracle with
+    det_double swapped for the native cast gives a different row (the
+    teeth). Groups 'N' and 'R' are random prices near 1e5."""
     import random
 
-    from pyspark.sql import functions as F
+    import duckdb
 
-    from catena_spark.parity import duck_det_double, spark_det_double
+    from catena_spark import registry
+    from catena_spark.parity import det_double, norm_cell
 
-    P = 2**53  # 9007199254740992
-
-    def py_ref(x: int) -> float:
-        if abs(x) <= P:
-            return float(x)  # exact: |x| <= 2^53
-        a = abs(x)
-        l3, l2 = a // 10**27, (a % 10**27) // 10**18
-        l1, l0 = (a % 10**18) // 10**9, a % 10**9
-        mag = ((float(l3) * 1e9 + float(l2)) * 1e9 + float(l1)) * 1e9 + float(l0)
-        return -mag if x < 0 else mag
-
+    n, k, a, b = 1000, 499, 10_490_000, 1_789_971  # cent prices
+    rows = [
+        ("A", float(1 + (i * 7) % 50), (a if i < k else b) / 100, (i % 11) / 100)
+        for i in range(n)
+    ]
     rng = random.Random(20260814)
-    vals = [0, 1, -1, 42, P - 3, P - 1, P, P + 1, P + 2, P + 111,
-            -(P - 1), -P, -(P + 1), -(P + 2),
-            2**62 + 12345, -(2**62 + 12345), 10**30 + 7, -(10**30 + 7),
-            10**37 + 999999999]
-    vals += [rng.randrange(P - 50, P + 50) * s for _ in range(100)
-             for s in (1, -1)]
-    vals += [rng.randrange(10**20, 10**24) for _ in range(50)]
-    # both branches must be exercised
-    assert any(abs(v) <= P for v in vals) and any(abs(v) > P for v in vals)
-
-    sdf = spark.createDataFrame(
-        [(str(v),) for v in vals], "v_str string"
-    ).select(
-        F.expr(spark_det_double("CAST(v_str AS DECIMAL(38,0))")).alias("d"),
-        F.col("v_str"),
+    rows += [
+        (rng.choice("NR"), float(rng.randint(1, 50)),
+         rng.randint(9_000_000, 10_500_000) / 100, rng.randint(0, 10) / 100)
+        for _ in range(200)
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE lineitem(l_returnflag VARCHAR, l_quantity DOUBLE,"
+        " l_extendedprice DOUBLE, l_discount DOUBLE)"
     )
-    got_spark = {r["v_str"]: r["d"] for r in sdf.collect()}
-    for v in vals:
-        got_duck = duck.execute(
-            f"SELECT {duck_det_double(f'CAST({v!r} AS HUGEINT)')}"
-        ).fetchone()[0]
-        want = py_ref(v)
-        assert got_spark[str(v)] == got_duck == want, (
-            v, got_spark[str(v)], got_duck, want,
-        )
-        if abs(v) <= P:
-            assert got_spark[str(v)] == float(v), v
+    con.executemany("INSERT INTO lineitem VALUES (?, ?, ?, ?)", rows)
+    con.execute(f"COPY lineitem TO '{tmp_path}/lineitem.parquet' (FORMAT PARQUET)")
 
+    def duck_rows(sql):
+        cur = con.execute(sql)
+        names = [d[0] for d in cur.description]
+        order = sorted(range(len(names)), key=lambda i: names[i])
+        return sorted(tuple(norm_cell(r[i]) for i in order) for r in cur.fetchall())
 
-def test_det_double_twins_share_fast_path_constant():
-    """ADVICE r9 item 4: the twins' fast-path branch predicates must be
-    derived from the SAME module constant — the Spark and DuckDB SQL
-    texts both carry DOUBLE_EXACT_MAX, so one edit moves both branches
-    (or neither)."""
-    from catena_spark.parity import DOUBLE_EXACT_MAX, duck_det_double, spark_det_double
+    spec = registry.specs()["agg_stats_suite"]
+    df = spec.fn(spark, str(tmp_path))
+    cols = sorted(df.columns)
+    got = sorted(tuple(norm_cell(r[c]) for c in cols) for r in df.collect())
+    assert got == duck_rows(spec.oracle)
 
-    assert DOUBLE_EXACT_MAX == 2**53
-    assert f"<= {DOUBLE_EXACT_MAX} " in duck_det_double("x")
-    assert f">= -{DOUBLE_EXACT_MAX}L AND " in spark_det_double("x")
-    assert f"<= {DOUBLE_EXACT_MAX}L " in spark_det_double("x")
+    assert k * (n - k) * (a - b) ** 2 >= 2**64
+    head, tail = det_double("@").split("@")
+    assert spec.oracle.count(head) == spec.oracle.count(tail) > 0
+    native = spec.oracle.replace(head, "CAST((").replace(tail, ") AS DOUBLE)")
+    assert duck_rows(native) != duck_rows(spec.oracle), (
+        "fixture lost its teeth: the native cast gives the same rows"
+    )
+    con.close()
 
 
 @PROP_SETTINGS
